@@ -123,6 +123,139 @@ def test_sqlite_roundtrip_with_transform(spark, tmp_path):
     assert con.execute("SELECT count(*) FROM products").fetchone()[0] == 2
 
 
+def _traced_inserts(monkeypatch) -> list[str]:
+    """INSERT statements the sqlite sink executes, in order."""
+    from tinyetl_spark.io import sqlite as sio
+
+    stmts: list[str] = []
+    connect = sqlite3.connect
+
+    def keep_inserts(sql: str) -> None:
+        if sql.lstrip().startswith("INSERT"):
+            stmts.append(sql)
+
+    def traced(*a, **kw):
+        con = connect(*a, **kw)
+        con.set_trace_callback(keep_inserts)
+        return con
+
+    monkeypatch.setattr(sio.sqlite3, "connect", traced)
+    return stmts
+
+
+@pytest.mark.parametrize(
+    "n_cols,n_rows,n_stmts",
+    [
+        (3, 0, 0),      # empty frame: table created, nothing inserted
+        (3, 300, 1),    # exactly rows_per_stmt (900 // 3) rows
+        (3, 301, 2),    # one full statement plus a one-row tail
+        (460, 3, 3),    # wider than 450 columns: one row per statement
+    ],
+    ids=["empty", "exact_chunk", "chunk_plus_one", "wide"],
+)
+def test_sqlite_chunk_boundaries_append_truncate(spark, tmp_path, monkeypatch,
+                                                 n_cols, n_rows, n_stmts):
+    from pyspark.sql import functions as F
+
+    from tinyetl_spark.io import sqlite as sio
+
+    df = spark.range(n_rows).select(
+        *[(F.col("id") * n_cols + i).alias(f"c{i}") for i in range(n_cols)]
+    )
+    db = str(tmp_path / "chunks.db")
+    stmts = _traced_inserts(monkeypatch)
+    assert sio.write_table(df, db, "t") == n_rows
+    assert len(stmts) == n_stmts
+    con = sqlite3.connect(db)
+    cols = [r[1] for r in con.execute('PRAGMA table_info("t")')]
+    assert cols == [f"c{i}" for i in range(n_cols)]
+    got = con.execute("SELECT c0, c1, count(*) FROM t GROUP BY c0, c1").fetchall()
+    assert sorted(got) == [(r * n_cols, r * n_cols + 1, 1) for r in range(n_rows)]
+    # append doubles the rows, truncate resets them
+    assert sio.write_table(df, db, "t") == n_rows
+    assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 2 * n_rows
+    assert sio.write_table(df, db, "t", truncate=True) == n_rows
+    assert con.execute("SELECT count(*) FROM t").fetchone()[0] == n_rows
+    con.close()
+
+
+def test_sqlite_decimal_and_nested_columns_land(spark, tmp_path):
+    """Decimals bind as REAL and nested values as JSON text, like the
+    DDL declares (sqlite3 binds neither Decimal nor list natively). A
+    dotted column name lands as written."""
+    from tinyetl_spark.io import sqlite as sio
+
+    df = spark.sql(
+        "SELECT CAST(12.34 AS DECIMAL(10,2)) AS `unit.price`, array(1, 2, 3) AS xs, "
+        "named_struct('a', 1, 'b', 'x') AS st, map('k', 2.5D) AS m"
+    )
+    db = str(tmp_path / "nested.db")
+    assert sio.write_table(df, db, "t") == 1
+    con = sqlite3.connect(db)
+    decl = {r[1]: r[2] for r in con.execute('PRAGMA table_info("t")')}
+    assert decl == {"unit.price": "REAL", "xs": "TEXT", "st": "TEXT", "m": "TEXT"}
+    row = con.execute(
+        'SELECT "unit.price", typeof("unit.price"), xs, typeof(xs), st, m FROM t'
+    ).fetchone()
+    assert row[:4] == (12.34, "real", "[1,2,3]", "text")
+    assert json.loads(row[4]) == {"a": 1, "b": "x"}
+    assert json.loads(row[5]) == {"k": 2.5}
+
+
+def test_sqlite_timestamps_ignore_driver_tz(spark, tmp_path):
+    """Timestamps render in the session time zone (UTC), not in the
+    driver process's local zone."""
+    import os
+    import time
+
+    from tinyetl_spark.io import sqlite as sio
+
+    df = spark.sql(
+        "SELECT timestamp'2024-01-01 00:00:00' AS whole, "
+        "timestamp'2024-01-01 00:00:00.123456' AS micros, date'2024-01-01' AS day"
+    )
+    db = str(tmp_path / "tz.db")
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        assert sio.write_table(df, db, "t") == 1
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    row = sqlite3.connect(db).execute("SELECT whole, micros, day FROM t").fetchone()
+    assert row == (
+        "2024-01-01T00:00:00+00:00",
+        "2024-01-01T00:00:00.123456+00:00",
+        "2024-01-01",
+    )
+
+
+def test_sqlite_null_in_every_column_type_is_sql_null(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    from tinyetl_spark.io import sqlite as sio
+
+    types = [
+        T.StringType(), T.LongType(), T.IntegerType(), T.ShortType(), T.ByteType(),
+        T.BooleanType(), T.DoubleType(), T.FloatType(), T.DecimalType(10, 2),
+        T.TimestampType(), T.TimestampNTZType(), T.DateType(), T.BinaryType(),
+        T.ArrayType(T.LongType()), T.MapType(T.StringType(), T.LongType()),
+        T.StructType([T.StructField("a", T.LongType())]),
+    ]
+    schema = T.StructType([T.StructField(f"c{i}", t) for i, t in enumerate(types)])
+    df = spark.createDataFrame([tuple([None] * len(types))], schema)
+    db = str(tmp_path / "nulls.db")
+    assert sio.write_table(df, db, "t") == 1
+    probe = ", ".join(f"typeof(c{i})" for i in range(len(types)))
+    assert sqlite3.connect(db).execute(f"SELECT {probe} FROM t").fetchone() == (
+        ("null",) * len(types)
+    )
+
+
 # --------------------------------------------------------- transforms
 
 def test_inline_preserves_columns_and_chains(spark):

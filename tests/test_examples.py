@@ -3,16 +3,19 @@
 Each test reproduces one of the reference's committed example runs
 (reference ``examples/run_all_examples.sh``) end-to-end through
 ``python -m tinyetl_spark.cli`` and asserts the reference's OWN
-committed expected outputs / value-level checks:
+committed expected outputs / value-level checks. The SQLite-target
+examples (05, 06, 11) write their inputs into ``tmp_path`` and assert
+only what the test derives itself from those inputs:
 
 * 01  basic CSV -> JSON            (committed ``output.json``, exact)
 * 02  file:// protocol -> parquet  (run.sh: file exists + readable)
-* 05  CSV -> SQLite                (committed ``employees.db``, exact)
-* 06  CSV -> SQLite + transforms   (committed ``products.db``, exact;
-                                    run.sh value asserts: price_cents
-                                    129999, 2 heavy items)
+* 05  CSV -> SQLite                (generated input: row count,
+                                    columns, typeof(), values)
+* 06  CSV -> SQLite + transforms   (generated input; run.sh value
+                                    asserts: price_cents 129999, 2
+                                    heavy items)
 * 10  CSV -> Avro                  (run.sh: non-empty; plus read-back)
-* 11  schema-file validation       (schemas/employee_schema.yaml)
+* 11  schema-file validation       (generated CSV + schema YAML)
 * 12  env-var secrets + dry-run    (run.sh: rc 0 with injected secret)
 * 13  YAML config + script         (committed ``employees_output.csv``,
                                     fresh fixture, value-exact modulo
@@ -104,25 +107,67 @@ def test_example_02_file_protocol_parquet(tmp_path, spark):
 
 # --------------------------------------------------------------- ex 05
 
-def test_example_05_csv_to_sqlite(tmp_path):
-    src = _cp(f"{REF}/05_csv_to_sqlite/employees.csv", tmp_path)
-    db = str(tmp_path / "employees.db")
-    assert cli.main([src, f"{db}#employees"]) == 0
+EMPLOYEES_CSV = """employee_id,first_name,last_name,email,department,salary,hire_date,is_active
+1,John,Smith,john.smith@example.com,Engineering,85000.50,2020-01-15,true
+2,Jane,Doe,jane.doe@example.com,Marketing,72000.00,2019-03-22,true
+3,Bob,Johnson,bob.johnson@example.com,Sales,65000.25,2021-07-01,false
+4,Alice,Brown,,Engineering,92000.75,2018-11-30,true
+5,Carol,White,carol.white@example.com,Finance,58000.00,2022-02-14,false
+"""
 
-    ours = sqlite3.connect(db)
-    ref = sqlite3.connect(f"{REF}/05_csv_to_sqlite/employees.db")
-    q = "SELECT * FROM employees ORDER BY employee_id"
-    cols = [d[0] for d in ours.execute(q).description]
-    ref_cols = [d[0] for d in ref.execute(q).description]
-    assert cols == ref_cols
-    # the committed fixture is a clean single run -> compare exactly
-    assert ours.execute(q).fetchall() == ref.execute(q).fetchall()
+
+def _typeof(con, table: str) -> dict:
+    cols = [r[1] for r in con.execute(f'PRAGMA table_info("{table}")')]
+    probe = ", ".join(f'typeof("{c}")' for c in cols)
+    kinds = [set() for _ in cols]
+    for row in con.execute(f'SELECT {probe} FROM "{table}"'):
+        for k, v in zip(kinds, row):
+            k.add(v)
+    return {c: k - {"null"} for c, k in zip(cols, kinds)}
+
+
+def test_example_05_csv_to_sqlite(tmp_path):
+    src = tmp_path / "employees.csv"
+    src.write_text(EMPLOYEES_CSV)
+    db = str(tmp_path / "employees.db")
+    assert cli.main([str(src), f"{db}#employees"]) == 0
+
+    with open(src) as fh:
+        want = list(csv.DictReader(fh))
+    con = sqlite3.connect(db)
+    con.row_factory = sqlite3.Row
+    got = [dict(r) for r in con.execute("SELECT * FROM employees ORDER BY employee_id")]
+    assert len(got) == len(want)
+    assert list(got[0]) == list(want[0])  # header order is column order
+    assert _typeof(con, "employees") == {
+        "employee_id": {"integer"}, "first_name": {"text"}, "last_name": {"text"},
+        "email": {"text"}, "department": {"text"}, "salary": {"real"},
+        "hire_date": {"text"}, "is_active": {"integer"},
+    }
+    for g, w in zip(got, want):
+        assert g["employee_id"] == int(w["employee_id"])
+        assert (g["first_name"], g["department"]) == (w["first_name"], w["department"])
+        assert g["email"] == (w["email"] or None)  # empty cell lands as NULL
+        assert g["salary"] == float(w["salary"])
+        # inferred dates land as RFC3339 UTC text, booleans as 0/1
+        assert g["hire_date"] == f"{w['hire_date']}T00:00:00+00:00"
+        assert g["is_active"] == (w["is_active"] == "true")
 
 
 # --------------------------------------------------------------- ex 06
 
+PRODUCTS_CSV = """product_code,name,category,unit_price,weight_kg
+SKU001,Laptop Pro,Electronics,1299.99,2.1
+SKU002,Office Desk,Furniture,349.50,32.0
+SKU003,Desk Lamp,Lighting,24.95,0.8
+SKU004,Bookshelf,Furniture,189.00,18.4
+SKU005,Headphones,Electronics,79.99,0.3
+"""
+
+
 def test_example_06_sqlite_transforms(tmp_path):
-    src = _cp(f"{REF}/06_csv_to_sqlite_with_transforms/products.csv", tmp_path)
+    src = tmp_path / "products.csv"
+    src.write_text(PRODUCTS_CSV)
     db = str(tmp_path / "products.db")
     transforms = (
         "full_name=row.product_code .. ': ' .. row.name; "
@@ -130,19 +175,28 @@ def test_example_06_sqlite_transforms(tmp_path):
         "weight_lb=row.weight_kg * 2.20462; "
         "is_heavy=row.weight_kg > 10"
     )
-    assert cli.main([src, f"{db}#products_enriched", "--transform", transforms]) == 0
+    assert cli.main([str(src), f"{db}#products_enriched", "--transform", transforms]) == 0
 
+    with open(src) as fh:
+        want = {r["product_code"]: r for r in csv.DictReader(fh)}
     con = sqlite3.connect(db)
     con.row_factory = sqlite3.Row
     rows = {r["product_code"]: dict(r)
             for r in con.execute("SELECT * FROM products_enriched")}
-    ref = sqlite3.connect(f"{REF}/06_csv_to_sqlite_with_transforms/products.db")
-    ref.row_factory = sqlite3.Row
-    ref_rows = {r["product_code"]: dict(r)
-                for r in ref.execute("SELECT * FROM products_enriched")}
-    assert set(rows) == set(ref_rows) == {f"SKU00{i}" for i in range(1, 6)}
-    for code, want in ref_rows.items():
-        assert _vals(rows[code]) == _vals(want), code
+    assert set(rows) == set(want) == {f"SKU00{i}" for i in range(1, 6)}
+    assert list(rows["SKU001"]) == [
+        "product_code", "name", "category", "unit_price", "weight_kg",
+        "full_name", "price_cents", "weight_lb", "is_heavy",
+    ]
+    types = _typeof(con, "products_enriched")
+    assert types["full_name"] == {"text"} and types["is_heavy"] == {"integer"}
+    assert types["price_cents"] == types["weight_lb"] == {"real"}
+    for code, w in want.items():
+        g = rows[code]
+        assert g["full_name"] == f"{code}: {w['name']}"
+        assert _num(g["price_cents"]) == _num(float(w["unit_price"]) * 100), code
+        assert _num(g["weight_lb"]) == _num(float(w["weight_kg"]) * 2.20462), code
+        assert g["is_heavy"] == (float(w["weight_kg"]) > 10), code
     # run.sh's own value asserts
     assert rows["SKU001"]["price_cents"] == 129999
     assert sum(1 for r in rows.values() if r["is_heavy"]) == 2
@@ -168,22 +222,60 @@ def test_example_10_csv_to_avro(tmp_path):
 
 # --------------------------------------------------------------- ex 11
 
-def test_example_11_schema_file(tmp_path):
-    src = _cp(f"{REF}/11_schema_file_validation/employees.csv", tmp_path)
-    schema = _cp(f"{REF}/schemas/employee_schema.yaml", tmp_path)
+SCHEMA_CSV = """employee_id,first_name,email,salary,is_full_time,hire_date,notes
+1,John,john@example.com,85000.50,yes,2020-01-15,remote
+2,Jane,,72000,no,2019-03-22,
+3,Bob,bob@example.com,65000.25,1,2021-07-01,onsite
+"""
+
+EMPLOYEE_SCHEMA = """\
+columns:
+  - {name: employee_id, type: integer, nullable: false}
+  - {name: first_name, type: string, nullable: false}
+  - {name: email, type: string, nullable: true, pattern: '^[^@]+@[^@]+$'}
+  - {name: salary, type: decimal, nullable: false}
+  - {name: is_full_time, type: boolean, nullable: false}
+  - {name: hire_date, type: date, nullable: false}
+  - {name: department, type: string, nullable: false, default: unassigned}
+"""
+
+
+def test_example_11_schema_file(tmp_path, spark):
+    src = tmp_path / "employees.csv"
+    src.write_text(SCHEMA_CSV)
+    schema = tmp_path / "employee_schema.yaml"
+    schema.write_text(EMPLOYEE_SCHEMA)
     db = str(tmp_path / "employees_final.db")
-    assert cli.main([src, f"{db}#employees", "--schema-file", schema]) == 0
+    assert cli.main([str(src), f"{db}#employees", "--schema-file", str(schema)]) == 0
+
     con = sqlite3.connect(db)
-    with open(src) as fh:
-        want = list(csv.DictReader(fh))
-    assert con.execute("SELECT COUNT(*) FROM employees").fetchone()[0] == len(want)
-    row = con.execute(
-        "SELECT employee_id, first_name, salary, is_full_time FROM employees "
-        "ORDER BY employee_id LIMIT 1"
-    ).fetchone()
-    assert row[0] == 1 and row[1] == "John"
-    assert float(row[2]) == 85000.50  # decimal enforced by the schema
-    assert row[3] in (1, True)  # boolean
+    # the schema drives the columns: declared order, undeclared `notes`
+    # dropped, the missing `department` filled from its default
+    assert _typeof(con, "employees") == {
+        "employee_id": {"integer"}, "first_name": {"text"}, "email": {"text"},
+        "salary": {"real"}, "is_full_time": {"integer"}, "hire_date": {"text"},
+        "department": {"text"},
+    }
+    got = con.execute("SELECT * FROM employees ORDER BY employee_id").fetchall()
+    assert got == [
+        (1, "John", "john@example.com", 85000.5, 1, "2020-01-15T00:00:00+00:00", "unassigned"),
+        (2, "Jane", None, 72000.0, 0, "2019-03-22T00:00:00+00:00", "unassigned"),
+        (3, "Bob", "bob@example.com", 65000.25, 1, "2021-07-01T00:00:00+00:00", "unassigned"),
+    ]
+
+    # a row that breaks the email pattern fails the CLI run (error mode)
+    # and lands nothing; filter mode drops exactly that row
+    bad = tmp_path / "bad.csv"
+    bad.write_text(SCHEMA_CSV + "4,Dan,not-an-email,50000,no,2023-05-05,\n")
+    assert cli.main([str(bad), f"{db}#employees", "--schema-file", str(schema)]) == 1
+    assert con.execute("SELECT COUNT(*) FROM employees").fetchone()[0] == 3
+
+    from tinyetl_spark.engine import transfer
+
+    st = transfer(spark, str(bad), f"{db}#employees", schema_file=str(schema),
+                  on_violation="filter", truncate=True)
+    assert st.rows_transferred == 3
+    assert [r[0] for r in con.execute("SELECT employee_id FROM employees")] == [1, 2, 3]
 
 
 # --------------------------------------------------------------- ex 12

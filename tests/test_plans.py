@@ -843,14 +843,29 @@ def test_rollup_cascade_raw_touched_once(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_triangle_count_no_cartesian_no_python(spark):
+def test_triangle_count_no_cartesian_no_python(spark, monkeypatch):
     """Triangle counting must stay equi-join shaped (wedge + closure
     joins on node ids) — no nested-loop/cartesian blowup, no Python,
-    and the staged pair table feeds it (no simhash recompute)."""
+    and the staged pair table feeds it (no simhash recompute). The
+    degree table is localCheckpointed, which hides the pair scan from
+    the final plan, so the staged dependency is asserted on the plans
+    handed to localCheckpoint."""
+    frame_cls = type(spark.range(1))
+    checkpointed: list[str] = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *a, **kw):
+        checkpointed.append(self._jdf.queryExecution().executedPlan().toString())
+        return local_checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
     p = plan_of(spark, "triangle_count_dups")
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    assert "simhash_pairs" in p  # staged parquet path
+    assert checkpointed, "degree table is no longer checkpointed"
+    deg = checkpointed[0]
+    assert "simhash_pairs" in deg  # staged parquet path
+    assert "BatchEvalPython" not in deg and "ArrowEvalPython" not in deg
 
 
 def test_perplexity_buckets_two_phase_no_source_window(spark):

@@ -5,9 +5,9 @@ reference drives it in-process behind a mutex (duckdb.rs:118-128), and
 the honest Spark equivalent is a DRIVER-side connector streaming
 bounded chunks (the duckdb Python module is in-container; there is no
 JDBC jar). Reads use DuckDB's Arrow fast path in record batches;
-writes stream ``toLocalIterator`` into a bulk INSERT via a registered
-Arrow view — the analogue of the reference's Appender API
-(duckdb.rs:16-76). For server-grade parallelism use the JDBC path.
+writes stream ``toLocalIterator`` rows into pandas frames of up to
+``batch_rows`` rows, each bulk-INSERTed through a registered view — the
+analogue of the reference's Appender API (duckdb.rs:16-76). For server-grade parallelism use the JDBC path.
 
 Parity:
 * schema via ``DESCRIBE`` (duckdb.rs:140-192)
@@ -99,8 +99,11 @@ def read_table(
 def write_table(
     df: DataFrame, db_path: str, table: str, truncate: bool = False, batch_rows: int = 50_000
 ) -> int:
-    """Append-first write with auto-DDL; bulk INSERT from Arrow batches
-    (the Appender-equivalent fast path). Returns rows written."""
+    """Append-first write with auto-DDL. Rows stream through
+    ``toLocalIterator`` (pickled, one partition at a time) into pandas
+    frames of up to ``batch_rows`` rows; each frame is registered as a
+    view and bulk-INSERTed (the Appender-equivalent path). Returns rows
+    written."""
     import duckdb
     import pandas as pd
 

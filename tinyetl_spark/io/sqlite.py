@@ -4,9 +4,16 @@ There is no sqlite JDBC driver jar in this environment, and SQLite is a
 single-writer embedded database anyway — parallel executor writes would
 serialize on the file lock. So this connector is deliberately
 DRIVER-SIDE (SURVEY.md §7.4): reads stream in bounded chunks into Arrow
-→ Spark; writes stream ``toLocalIterator()`` batches into chunked
-multi-row INSERTs. Rows cross the driver in bounded batches, never all
-at once. For a server-grade parallel path use the JDBC connectors.
+→ Spark; writes stream ``toLocalIterator()`` rows into chunked
+multi-row INSERTs. Rows cross the driver one partition at a time, never
+all at once. For a server-grade parallel path use the JDBC connectors.
+
+Writes are bind-ready before they leave Spark: one projection in the
+plan renders every column as the value sqlite3 binds (timestamps as
+RFC3339 text in the session time zone, dates as ``yyyy-MM-dd``,
+booleans as 0/1, decimals as doubles, nested values as JSON text), so
+the driver loop only slices the row stream into full-width INSERTs and
+never touches a value.
 
 Parity with the reference (src/connectors/sqlite.rs):
 * schema from ``PRAGMA table_info`` (sqlite.rs:76-101)
@@ -21,9 +28,10 @@ from __future__ import annotations
 
 import os
 import sqlite3
-from collections.abc import Iterator
+from itertools import chain, islice
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MAX_BIND_VARS = 900
@@ -107,16 +115,21 @@ def read_table(
     return out
 
 
-def _to_bindable(value):
-    import datetime as dt
-
-    if isinstance(value, (dt.datetime,)):
-        return value.isoformat(sep="T") + "+00:00"  # RFC3339-ish, like TEXT dates
-    if isinstance(value, dt.date):
-        return value.isoformat()
-    if isinstance(value, bool):
-        return int(value)
-    return value
+def _bindable(c: Column, dt: T.DataType) -> Column:
+    """``c`` rendered as the value sqlite3 binds for a ``dt`` column."""
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        # isoformat parity: fraction only when the microseconds are non-zero
+        iso = F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+        return F.concat(F.regexp_replace(iso, r"\.000000$", ""), F.lit("+00:00"))
+    if isinstance(dt, T.DateType):
+        return F.date_format(c, "yyyy-MM-dd")
+    if isinstance(dt, T.BooleanType):
+        return c.cast("int")
+    if isinstance(dt, T.DecimalType):
+        return c.cast("double")
+    if isinstance(dt, (T.StructType, T.ArrayType, T.MapType)):
+        return F.to_json(c)
+    return c
 
 
 def write_table(
@@ -127,42 +140,31 @@ def write_table(
 ) -> int:
     """Append-first write with auto-DDL; returns rows written."""
     os.makedirs(os.path.dirname(os.path.abspath(db_path)) or ".", exist_ok=True)
-    cols = df.columns
-    ddl_cols = ", ".join(
-        f'"{f.name}" {_sqlite_type(f.dataType)}' for f in df.schema.fields
+    fields = df.schema.fields
+    ddl_cols = ", ".join(f'"{f.name}" {_sqlite_type(f.dataType)}' for f in fields)
+    rows_per_stmt = max(1, MAX_BIND_VARS // max(1, len(fields)))
+    placeholders = "(" + ", ".join("?" for _ in fields) + ")"
+    names = ", ".join(f'"{f.name}"' for f in fields)
+    insert = f'INSERT INTO "{table}" ({names}) VALUES '
+    full_stmt = insert + ", ".join([placeholders] * rows_per_stmt)
+    # positional names: the projection never parses a user column name
+    pos = [f"_{i}" for i in range(len(fields))]
+    bindable = df.toDF(*pos).select(
+        *(_bindable(F.col(p), f.dataType) for p, f in zip(pos, fields))
     )
-    rows_per_stmt = max(1, MAX_BIND_VARS // max(1, len(cols)))
-    placeholders = "(" + ", ".join("?" for _ in cols) + ")"
     written = 0
     con = sqlite3.connect(db_path)
     try:
         con.execute(f'CREATE TABLE IF NOT EXISTS "{table}" ({ddl_cols})')
         if truncate:
             con.execute(f'DELETE FROM "{table}"')
-        buf: list[tuple] = []
-
-        def flush(batch: list[tuple]) -> None:
-            if not batch:
-                return
-            sql = (
-                f'INSERT INTO "{table}" ({", ".join(chr(34) + c + chr(34) for c in cols)}) '
-                f"VALUES {', '.join([placeholders] * len(batch))}"
-            )
-            con.execute(sql, [v for row in batch for v in row])
-
-        for row in _iter_rows(df):
-            buf.append(tuple(_to_bindable(v) for v in row))
-            written += 1
-            if len(buf) >= rows_per_stmt:
-                flush(buf)
-                buf = []
-        flush(buf)
+        rows = bindable.toLocalIterator(prefetchPartitions=True)
+        while chunk := list(islice(rows, rows_per_stmt)):
+            n = len(chunk)
+            stmt = full_stmt if n == rows_per_stmt else insert + ", ".join([placeholders] * n)
+            con.execute(stmt, list(chain.from_iterable(chunk)))
+            written += n
         con.commit()
     finally:
         con.close()
     return written
-
-
-def _iter_rows(df: DataFrame) -> Iterator[tuple]:
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        yield tuple(row)
