@@ -265,6 +265,17 @@ def test_inline_preserves_columns_and_chains(spark):
     assert row.a == 2 and row.b == 3.0 and row.c == 5.0 and row.d == 10.0
 
 
+def test_arithmetic_on_text_converts_like_lua(spark):
+    # a column inferred as string (mixed int/decimal text) in arithmetic:
+    # Lua converts the text; ANSI mode's implicit bigint cast would fail
+    df = spark.createDataFrame([("7000",), ("6200.5",), ("n/a",)], "pay string")
+    out = apply_inline(df, "yearly=row.pay * 12; half=row.pay / 2")
+    assert dict(out.dtypes)["yearly"] == "double"
+    assert [(r.yearly, r.half) for r in out.collect()] == [
+        (84000.0, 3500.0), (74406.0, 3100.25), (None, None),
+    ]
+
+
 def test_script_mode_comments_and_chaining(spark):
     df = spark.createDataFrame([(100.0,)], "price double")
     out = apply_script(df, "-- tax calc\nnet = row.price / 1.19\ntax = row.price - net\n")
@@ -373,6 +384,96 @@ def test_boolean_string_coercion(spark):
     df = spark.createDataFrame([("yes",), ("0",), ("FALSE",)], "flag string")
     got = [r.flag for r in rules.apply(df).collect()]
     assert got == [True, False, False]
+
+
+# ------------------------------- declared schema vs inference, try_cast
+
+def _write(tmp_path, name: str, text: str) -> str:
+    p = tmp_path / name
+    p.write_text(text)
+    return str(p)
+
+
+def test_inferred_cast_nulls_a_late_malformed_value(spark, tmp_path):
+    # the 1000-row sample sees only ints; the late 'abc' must become NULL
+    # (try_cast), not fail the job under ANSI mode
+    src = _write(tmp_path, "late.csv",
+                 "n\n" + "".join(f"{i}\n" for i in range(1500)) + "abc\n")
+    out = str(tmp_path / "late.parquet")
+    assert transfer(spark, src, out).rows_transferred == 1501
+    back = spark.read.parquet(out)
+    assert dict(back.dtypes) == {"n": "bigint"}
+    assert back.filter("n IS NULL").count() == 1
+    assert back.agg({"n": "max"}).first()[0] == 1499
+
+
+Q_SCHEMA = "columns:\n  - {name: q, type: integer}\n  - {name: tag, type: string}\n"
+
+
+@pytest.mark.parametrize("values,kept", [
+    (["1", "abc", "3"], [1, 3]),
+    (["1.5", "2.0", "3"], [3]),  # decimal text is not an integer
+])
+def test_declared_integer_malformed_text_is_filtered(spark, tmp_path, values, kept):
+    src = _write(tmp_path, "q.csv",
+                 "q,tag\n" + "".join(f"{v},t{i}\n" for i, v in enumerate(values)))
+    schema = _write(tmp_path, "q.yaml", Q_SCHEMA)
+    out = str(tmp_path / "q.parquet")
+    st = transfer(spark, src, out, schema_file=schema, on_violation="filter")
+    assert st.rows_transferred == len(kept)
+    assert sorted(r.q for r in spark.read.parquet(out).collect()) == kept
+
+
+def test_declared_integer_malformed_text_names_the_column(spark, tmp_path):
+    src = _write(tmp_path, "q.csv", "q,tag\n1,a\nabc,b\n")
+    schema = _write(tmp_path, "q.yaml", Q_SCHEMA)
+    with pytest.raises(Exception, match=r"schema violation on column 'q' .*value=abc"):
+        transfer(spark, src, str(tmp_path / "q.parquet"), schema_file=schema)
+
+
+def test_declared_string_columns_keep_their_text(spark, tmp_path):
+    # inference would read 00501 as 501 and the date as a timestamp; a
+    # declared schema replaces inference, so the text lands unchanged
+    src = _write(tmp_path, "zips.csv", "zip,day,n\n00501,2024-01-01,7\n10001,2024-02-03,\n")
+    schema = _write(tmp_path, "zips.yaml", "columns:\n"
+                    "  - {name: zip, type: string}\n"
+                    "  - {name: day, type: string}\n"
+                    "  - {name: n, type: integer}\n")
+    out = str(tmp_path / "zips.parquet")
+    transfer(spark, src, out, schema_file=schema)
+    back = spark.read.parquet(out)
+    assert dict(back.dtypes) == {"zip": "string", "day": "string", "n": "bigint"}
+    assert sorted(tuple(r) for r in back.collect()) == [
+        ("00501", "2024-01-01", 7), ("10001", "2024-02-03", None),
+    ]
+
+
+@pytest.mark.parametrize("declared,jobs", [(True, 2), (False, 3)])
+def test_declared_schema_skips_the_inference_job(spark, tmp_path, declared, jobs):
+    # CSV -> Parquet runs the header read and the write; inference adds
+    # its 1000-row sample job
+    src = _write(tmp_path, "in.csv", "a,b\n1,x\n2,y\n")
+    schema = _write(tmp_path, "in.yaml", "columns:\n  - {name: a, type: integer}\n"
+                    "  - {name: b, type: string}\n")
+    sc = spark.sparkContext
+    group = f"jobs-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        transfer(spark, src, str(tmp_path / "out.parquet"),
+                 schema_file=schema if declared else None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+def test_session_turns_off_call_site_capture(spark, monkeypatch):
+    import pyspark.errors.utils as perr
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # the flag is cached per process at the first Column call; recompute
+    # it against the session get_spark built
+    monkeypatch.setattr(perr, "_enable_debugging_cache", None)
+    assert perr.is_debugging_enabled() is False
 
 
 # ----------------------------------------------------------- CLI/YAML

@@ -191,10 +191,17 @@ def transfer(
     dry_run: bool = False,
     on_violation: str = "error",
 ) -> TransferStats:
-    """Run one transfer. Returns stats; raises on config/validation errors."""
+    """Run one transfer. Returns stats; raises on config/validation errors.
+
+    The schema comes from ``schema_file`` or from inference, never both
+    (reference src/transfer.rs:38-48): with a declared schema, CSV and
+    JSON sources are read raw and the declared casts (``try_cast``
+    semantics) read the source text, so no sample job runs and declared
+    ``string`` columns keep their text (``00501`` stays ``00501``).
+    """
     t0 = time.perf_counter()
     src = parse_uri(source, format_hint=source_type, options=source_options)
-    df = read_source(spark, src)
+    df = read_source(spark, src, infer=not schema_file)
 
     if schema_file:
         from tinyetl_spark.validate import SchemaFile

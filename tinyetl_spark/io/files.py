@@ -80,16 +80,17 @@ def is_single_file(path: str, fmt: str) -> bool:
 # ----------------------------------------------------------------- read
 
 def read_csv(spark: SparkSession, path: str, infer: bool = True) -> DataFrame:
-    """Header-aware CSV read with TinyETL type sniffing."""
+    """Header-aware CSV read with TinyETL type sniffing.
+
+    csv() with no schema reads every column as string, so ``infer=False``
+    returns the raw text (the transfer engine does this when a schema
+    file declares the types)."""
     raw = (
         spark.read.option("header", "true")
         .option("nullValue", "")
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
-    # csv() with no schema reads every column as string already; make it
-    # explicit so inference sees the raw text
-    raw = raw.select(*[F.col(c).cast("string").alias(c) for c in raw.columns])
     if not infer:
         return raw
     return apply_inference(raw, infer_from_string_df(raw))

@@ -14,10 +14,14 @@ src/schema.rs:461-554 ``SchemaInferer``):
 
 Spark difference, by design: the reference re-sniffs EVERY row, so one
 column can hold differently-typed values; Spark columns are statically
-typed, so the inferred type is applied with ``try_cast`` semantics —
-a late value that doesn't conform becomes NULL instead of changing
-type mid-column. The sample is 1000 rows on the DRIVER (bounded, same
-as the reference); everything after that is a distributed cast.
+typed, so the inferred type is applied with ``try_cast`` — a late value
+that doesn't conform becomes NULL instead of changing type mid-column
+(a plain ``cast`` would fail the job under ANSI mode, Spark 4's
+default). The sample is 1000 rows on the DRIVER (bounded, same as the
+reference); everything after that is a distributed cast.
+
+Inference runs only when no schema file is given: a declared schema
+replaces it (``engine.transfer``), as in the reference.
 """
 
 from __future__ import annotations
@@ -103,11 +107,11 @@ def coercion_expr(col_name: str, data_type: str) -> Column:
     """
     c = F.col(col_name)
     if data_type == INTEGER:
-        return c.cast("bigint")
+        return c.try_cast("bigint")
     if data_type == DECIMAL:
         # the reference's Decimal is lossy to f64 at every file boundary
         # (src/schema.rs:29,394) — double matches observable behavior
-        return c.cast("double")
+        return c.try_cast("double")
     if data_type == BOOLEAN:
         return (
             F.when(c == "true", F.lit(True))

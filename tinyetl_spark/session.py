@@ -47,6 +47,17 @@ _DEFAULTS = {
     # reads TIMESTAMP_NTZ natively. Harmless where ignored — loaders
     # (queries._normalize_events_ts) map both shapes to µs timestamps.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # PySpark wraps every Column/functions call in a call-site capture
+    # that costs five py4j round trips per call (active-session lookup,
+    # origin lookup, conf read, origin set and clear); a schema stage of
+    # 8 columns paid ~1,500 of them. The cost of turning it off: the
+    # "== DataFrame == ... was called from" section of a Spark error no
+    # longer names the Python file:line that built the failing
+    # expression. To get it back, pass extra_conf=
+    # {"spark.python.sql.dataFrameDebugging.enabled": "true"} in a fresh
+    # process: PySpark reads the flag once, at the first Column call,
+    # and keeps it for the life of the process.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

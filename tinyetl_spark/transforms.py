@@ -374,6 +374,8 @@ class _Compiler:
         # must be falsy when false, not merely when null.
         if dt == "boolean":
             return "bool"
+        if dt == "string":
+            return "str"
         return "col"
 
     def _strctx(self, col: Column, cls: str) -> Column:
@@ -382,6 +384,13 @@ class _Compiler:
         if cls == "ts":
             return F.date_format(col, LUA_TS_FMT)
         return col.cast("string")
+
+    @staticmethod
+    def _numctx(col: Column, cls: str) -> Column:
+        """A value entering arithmetic: text converts like Lua's string
+        coercion (NULL where it is not a number). ANSI mode's implicit
+        cast would take ``'6200.5' * 12`` to bigint and fail the job."""
+        return col.try_cast("double") if cls == "str" else col
 
     def _c(self, node: Node) -> tuple[Column, str]:
         if node.kind == "lit":
@@ -427,6 +436,7 @@ class _Compiler:
             return a != b, "bool"
         if op in ("<", "<=", ">", ">="):
             return {"<": a < b, "<=": a <= b, ">": a > b, ">=": a >= b}[op], "bool"
+        a, b = self._numctx(a, acls), self._numctx(b, bcls)
         if op == "+":
             return a + b, "num"
         if op == "-":

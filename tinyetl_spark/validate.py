@@ -97,10 +97,12 @@ class SchemaFile:
         dt = rule.data_type
         if dt == "string":
             return c.cast("string")
+        # try_cast: a malformed value becomes NULL and is reported as a
+        # type violation, where ANSI mode's cast would fail the job
         if dt == "integer":
-            return c.cast("bigint")
+            return c.try_cast("bigint")
         if dt == "decimal":
-            return c.cast("double")
+            return c.try_cast("double")
         if dt == "boolean":
             if isinstance(src, T.StringType):
                 lowered = F.lower(c)
@@ -109,7 +111,7 @@ class SchemaFile:
                     .when(lowered.isin("false", "0", "no"), F.lit(False))
                     .otherwise(F.lit(None).cast("boolean"))
                 )
-            return c.cast("boolean")
+            return c.try_cast("boolean")
         if dt in ("date", "datetime"):
             if isinstance(src, (T.TimestampType, T.TimestampNTZType, T.DateType)):
                 return c.cast("timestamp")
@@ -140,19 +142,13 @@ class SchemaFile:
         if rule.data_type == "json" and raw_present:
             bad = bad | (raw.isNotNull() & F.get_json_object(coerced, "$").isNull())
         # non-null enforcement when no default fills it
-        if not rule.nullable and self._default_lit(rule) is None:
+        if not rule.nullable and rule.default is None:
             bad = bad | coerced.isNull() if raw_present else F.lit(True)
         # pattern on the string form; nulls skip
         if rule.pattern:
             s = coerced.cast("string")
             bad = bad | (s.isNotNull() & ~s.rlike(rule.pattern))
         return bad
-
-    def _final_value(self, rule: ColumnRule, coerced: Column) -> Column:
-        d = self._default_lit(rule)
-        if d is not None:
-            return F.coalesce(coerced, d)
-        return coerced
 
     # ---------------------------------------------------------- apply
 
@@ -165,8 +161,12 @@ class SchemaFile:
         msgs: list[Column] = []
         for rule in self.columns:
             coerced = self._coerced(df, rule)
+            default = self._default_lit(rule)
             bad = self._violation(df, rule, coerced)
             any_bad = any_bad | bad
+            selects.append(coerced if default is None else F.coalesce(coerced, default))
+            if on_violation == "filter":
+                continue
             msgs.append(
                 F.when(
                     bad,
@@ -184,19 +184,15 @@ class SchemaFile:
                     ),
                 )
             )
-            selects.append(self._final_value(rule, coerced).alias(rule.name))
         if on_violation == "filter":
-            return df.filter(~any_bad).select(*selects)
-        # error mode: the first output column carries the guard — CASE
-        # branches are lazy, so raise_error fires only on a violating
-        # row, inside the same codegen pass (no second scan).
-        rule0 = self.columns[0]
-        first_val = self._final_value(rule0, self._coerced(df, rule0))
-        msg = F.coalesce(*msgs, F.lit("schema violation"))
-        selects[0] = (
-            F.when(any_bad, F.raise_error(msg)).otherwise(first_val).alias(rule0.name)
-        )
-        return df.select(*selects)
+            df = df.filter(~any_bad)
+        else:
+            # error mode: the first output column carries the guard — CASE
+            # branches are lazy, so raise_error fires only on a violating
+            # row, inside the same codegen pass (no second scan).
+            msg = F.coalesce(*msgs, F.lit("schema violation"))
+            selects[0] = F.when(any_bad, F.raise_error(msg)).otherwise(selects[0])
+        return df.select(*[v.alias(r.name) for v, r in zip(selects, self.columns)])
 
     def split(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Quarantine mode: (valid rows coerced, violating raw rows)."""
