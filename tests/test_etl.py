@@ -276,6 +276,29 @@ def test_arithmetic_on_text_converts_like_lua(spark):
     ]
 
 
+def test_string_number_equality_is_false_like_lua(spark):
+    # Lua never equates a string and a number; ANSI mode would cast the
+    # text and fail the job on 'n/a'
+    df = spark.createDataFrame([("10", 1), ("n/a", 10), (None, 5)], "s string, n long")
+    out = apply_inline(df, "eq=row.s == 10; ne=row.s ~= 10; neq=row.n == '1'; "
+                           "nne=row.n ~= '1'; same=row.n == 10")
+    assert [(r.eq, r.ne, r.neq, r.nne, r.same) for r in out.collect()] == [
+        (False, True, False, True, False),
+        (False, True, False, True, True),
+        (False, True, False, True, False),
+    ]
+
+
+@pytest.mark.parametrize("op", ["<", "<=", ">", ">="])
+@pytest.mark.parametrize("expr", ["row.s {op} 10", "10 {op} row.s", "row.n {op} '1'"])
+def test_ordering_string_with_number_raises_like_lua(spark, op, expr):
+    from tinyetl_spark.transforms import TransformError
+
+    df = spark.createDataFrame([("2.1", 1)], "s string, n long")
+    with pytest.raises(TransformError, match="attempt to compare string with number"):
+        apply_inline(df, "x=" + expr.format(op=op))
+
+
 def test_script_mode_comments_and_chaining(spark):
     df = spark.createDataFrame([(100.0,)], "price double")
     out = apply_script(df, "-- tax calc\nnet = row.price / 1.19\ntax = row.price - net\n")

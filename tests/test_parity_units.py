@@ -78,6 +78,10 @@ def test_resolve_column_rules():
         ("sqlserver://u:p@h/db#t", "mssql", "t"),
         ("odbc://DSN=x;UID=y#t", "odbc", "t"),
         ("snowflake://acct/db#t", "snowflake", "t"),
+        ("snowflake://u:p@acct/db/public?warehouse=WH&table=orders", "snowflake", "orders"),
+        ("snowflake://acct/db/public?warehouse=WH&table=orders#t", "snowflake", "t"),
+        ("snowflake://acct/db/public?warehouse=WH", "snowflake", "public"),
+        ("postgres://u@h/db?sslmode=require", "postgres", "db"),
         ("http://x.com/f.csv", "http", "f"),
         ("https://x.com/f.json", "http", "f"),
         ("ssh://user@host/p/f.csv", "ssh", "f"),

@@ -13,10 +13,12 @@ Scale notes are attached per query where the plan shape matters.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tinyetl_spark.functions.dates import FORMATS, parse_date_multi, parse_date_multi_sql
 from tinyetl_spark.functions.hashing import hash64_col, hash64_sql
@@ -104,14 +106,40 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# (path, st_mtime_ns, st_size) -> the schema Spark inferred for that file
+_FILE_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a testdata table, normalizing nanosecond parquet timestamps
-    to a plain µs TIMESTAMP (see _normalize_events_ts)."""
+    to a plain µs TIMESTAMP (see _normalize_events_ts).
+
+    Spark infers a Parquet schema with a job that reads the footer
+    (about 50 ms even for one file), so the first read of a file keeps
+    the inferred schema in ``_FILE_SCHEMAS`` and later reads pass it
+    through ``spark.read.schema``, which runs no job. The key is the
+    path with the file's mtime and size, so a rewritten file is inferred
+    again. The memo holds a plain StructType and no Spark state: it is
+    valid in any session of the process, and every read still builds a
+    new relation with fresh attribute ids, so self-joins stay safe. The
+    schema is the raw file schema (``ts`` as Spark read it), and the
+    events normalization runs on every read. A path ``os.stat`` cannot
+    reach (a remote URL) is inferred on every read."""
     _ensure_runtime_confs(spark)
     path = f"{sf_dir}/{table}.parquet"
-    if table == "events":
-        return _normalize_events_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        df = spark.read.parquet(path)  # Spark reports a missing path
+    else:
+        key = (path, st.st_mtime_ns, st.st_size)
+        schema = _FILE_SCHEMAS.get(key)
+        if schema is None:
+            df = spark.read.parquet(path)
+            _FILE_SCHEMAS[key] = df.schema
+        else:
+            df = spark.read.schema(schema).parquet(path)
+    return _normalize_events_ts(df) if table == "events" else df
 
 
 def dec(c) -> F.Column:
@@ -7777,7 +7805,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark.functions.hashing import hash128_col
     from tinyetl_spark.operators.dedup import norm_text_col
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = load(spark, sf_dir, "documents").schema
     stage = _stage_table_symlink(sf_dir, "documents")
     stream = spark.readStream.schema(raw_schema).parquet(stage)
     fp = stream.select(hash128_col(norm_text_col("text")).alias("fp"))
@@ -7807,7 +7835,7 @@ def streaming_perceptual_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark import streaming
     from tinyetl_spark.operators import multimodal
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = load(spark, sf_dir, "documents").schema
     stage = _stage_table_symlink(sf_dir, "documents")
     stream = spark.readStream.schema(raw_schema).parquet(stage)
     src = stream.filter(
@@ -7865,7 +7893,7 @@ def streaming_media_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark import streaming
     from tinyetl_spark.operators import multimodal
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = load(spark, sf_dir, "documents").schema
     stage = _stage_table_symlink(sf_dir, "documents")
     stream = spark.readStream.schema(raw_schema).parquet(stage)
     src = stream.filter(
@@ -8001,7 +8029,7 @@ def streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning-time partition pruning. Verified by the per-cell counts
     of the index read back against the batch oracle."""
     stage = _stage_table_symlink(sf_dir, "embeddings")
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = load(spark, sf_dir, "embeddings").schema
     stream = spark.readStream.schema(schema).parquet(stage)
     assigned = similarity.ivf_assign(
         stream.select("vec_id", "embedding"), "embedding",
@@ -8172,7 +8200,7 @@ def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark import streaming
 
     stage = _stage_table_symlink(sf_dir, "documents")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = load(spark, sf_dir, "documents").schema
     stream = spark.readStream.schema(schema).parquet(stage)
     kept = text.gopher_filter(stream)
     agg = kept.groupBy("source").agg(
@@ -8194,7 +8222,7 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark import streaming
 
     stage = _stage_table_symlink(sf_dir, "documents")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = load(spark, sf_dir, "documents").schema
     stream = spark.readStream.schema(schema).parquet(stage)
     agg = (
         stream.select(
@@ -8225,7 +8253,7 @@ def streaming_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = [wmap.get(b, 0) for b in range(classifier.BUCKETS)]
     bias_w = wmap.get(classifier.BIAS_B, 0)
     stage = _stage_table_symlink(sf_dir, "documents")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = load(spark, sf_dir, "documents").schema
     stream = spark.readStream.schema(schema).parquet(stage)
     scored = classifier.score_with_frozen_model(stream, weights, bias_w)
     return streaming.run_bounded(scored, spark, mode="append", state_partitions=None)

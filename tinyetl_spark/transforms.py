@@ -341,6 +341,8 @@ def _lit_str(node: Node) -> str:
 # (prefix matches, substrings, ordering) is identical.
 LUA_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
 
+_NUMERIC_DTYPES = {"tinyint", "smallint", "int", "bigint", "float", "double", "decimal"}
+
 
 class _Compiler:
     """env maps bare names (earlier assignments) to Columns. dtypes maps
@@ -377,6 +379,14 @@ class _Compiler:
         if dt == "string":
             return "str"
         return "col"
+
+    def _cmpcls(self, node: Node, cls: str) -> str:
+        """An operand's class for a comparison: an input column of a
+        numeric type is a number there, as its value is in Lua."""
+        if node.kind == "rowref" or (node.kind == "name" and node.val not in self.env):
+            if self.dtypes.get(str(node.val), "").split("(")[0] in _NUMERIC_DTYPES:
+                return "num"
+        return cls
 
     def _strctx(self, col: Column, cls: str) -> Column:
         """A value entering a STRING context: timestamps become their
@@ -430,6 +440,15 @@ class _Compiler:
         b, bcls = self._c(node.b)
         if op == "..":
             return F.concat(self._strctx(a, acls), self._strctx(b, bcls)), "str"
+        if {self._cmpcls(node.a, acls), self._cmpcls(node.b, bcls)} == {"str", "num"}:
+            # Lua never equates a string and a number, and refuses to
+            # order them; ANSI mode would cast the text and fail the job
+            if op == "==":
+                return F.lit(False), "bool"
+            if op == "~=":
+                return F.lit(True), "bool"
+            if op in ("<", "<=", ">", ">="):
+                raise TransformError("attempt to compare string with number")
         if op == "==":
             return a == b, "bool"
         if op == "~=":

@@ -9,7 +9,8 @@ and src/protocols/mod.rs:52-100, file protocol src/protocols/file.rs:21-100):
 * server DBs by scheme: ``postgres://`` ``postgresql://`` ``mysql://``
   ``mssql://`` ``sqlserver://`` ``odbc://`` ``snowflake://``
 * transports: ``file://`` ``http://`` ``https://`` ``ssh://``
-* ``#fragment`` names the table; files default to the file stem.
+* ``#fragment`` names the table, else a server DB's ``table=`` query
+  parameter; files default to the file stem.
 
 The result is a plain :class:`Location` — the Spark side maps it onto a
 DataFrameReader/Writer instead of boxed Source/Target trait objects.
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from urllib.parse import parse_qs, urlsplit
 
 FILE_KINDS = {"csv", "json", "parquet", "avro", "orc"}
 EMBEDDED_DB_KINDS = {"sqlite", "duckdb"}
@@ -81,7 +83,7 @@ class Location:
         else the file stem (reference src/transfer.rs:370-381)."""
         if self.table:
             return self.table
-        stem = os.path.basename(self.path.rstrip("/"))
+        stem = os.path.basename(self.path.split("?", 1)[0].rstrip("/"))
         return stem.split(".")[0] if stem else "data"
 
 
@@ -134,8 +136,12 @@ def parse_uri(
             inner = format_hint or _ext_kind(base)
             options.setdefault("format", inner or "")
             return Location("ssh", base, table, options, raw)
-        # server DBs keep the full URL (minus fragment) as the connect string
+        # server DBs keep the full URL (minus fragment) as the connect
+        # string; a table= query parameter names the table, as in the
+        # reference's snowflake://.../db/schema?warehouse=WH&table=T
         base, table = _split_fragment(uri)
+        if table is None:
+            table = parse_qs(urlsplit(base).query).get("table", [None])[0]
         return Location(kind, base, table, options, raw)
 
     # 'sqlite:path' / 'duckdb:path' single-colon prefixes
