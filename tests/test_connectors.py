@@ -12,8 +12,38 @@ import pytest
 from tinyetl_spark.engine import transfer
 
 
+REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+
+
+def _write_nation(tmp_path) -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nation.parquet")
+    pq.write_table(pa.table({
+        "n_nationkey": pa.array(range(25), pa.int64()),
+        "n_name": [f"NATION_{i:02d}" for i in range(25)],
+        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int64()),
+        "n_comment": [f"comment {i}" for i in range(25)],
+    }), path)
+    return path
+
+
+def _write_region(tmp_path) -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({
+        "r_regionkey": pa.array(range(5), pa.int64()),
+        "r_name": REGIONS,
+        "r_comment": [f"comment {i}" for i in range(5)],
+    }), path)
+    return path
+
+
 def test_duckdb_roundtrip_append_truncate(spark, tmp_path):
-    src = "/root/testdata/sf0.001/nation.parquet"
+    src = _write_nation(tmp_path)
     db = str(tmp_path / "wh.duckdb")
     st = transfer(spark, src, f"{db}#nations")
     assert st.rows_transferred == 25
@@ -36,15 +66,14 @@ def test_duckdb_roundtrip_append_truncate(spark, tmp_path):
 
 def test_duckdb_read_values_match(spark, tmp_path):
     db = str(tmp_path / "v.duckdb")
-    transfer(spark, "/root/testdata/sf0.001/region.parquet", f"{db}#region")
+    src = _write_region(tmp_path)
+    transfer(spark, src, f"{db}#region")
     from tinyetl_spark.io import duckdb_io
 
     back = duckdb_io.read_table(spark, db, "region")
     names = sorted(r.r_name for r in back.collect())
-    orig = sorted(
-        r.r_name for r in spark.read.parquet("/root/testdata/sf0.001/region.parquet").collect()
-    )
-    assert names == orig
+    orig = sorted(r.r_name for r in spark.read.parquet(src).collect())
+    assert names == orig == REGIONS
 
 
 def test_snowflake_mock_roundtrip(spark, tmp_path):

@@ -253,8 +253,10 @@ def transfer(
             append = False  # missing, or exists-but-no-append → recreate
 
     if tgt.kind in ("sqlite", "duckdb", "avro", "odbc"):
-        # driver-side sinks stream toLocalIterator and count themselves;
-        # an Observation would never resolve for that execution shape.
+        # driver-side sinks stream the frame to the driver themselves
+        # (Arrow batches for sqlite/duckdb, toLocalIterator for odbc and
+        # the Python avro codec) and count the rows they write; an
+        # Observation would never resolve for that execution shape.
         # (avro may take the spark-native path and return None → count.)
         rows = write_target(df, tgt, append=append)
         if rows is None:

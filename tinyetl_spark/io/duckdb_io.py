@@ -5,9 +5,12 @@ reference drives it in-process behind a mutex (duckdb.rs:118-128), and
 the honest Spark equivalent is a DRIVER-side connector streaming
 bounded chunks (the duckdb Python module is in-container; there is no
 JDBC jar). Reads use DuckDB's Arrow fast path in record batches;
-writes stream ``toLocalIterator`` rows into pandas frames of up to
-``batch_rows`` rows, each bulk-INSERTed through a registered view — the
-analogue of the reference's Appender API (duckdb.rs:16-76). For server-grade parallelism use the JDBC path.
+writes stream Arrow record batches (:mod:`.arrow_stream`, one partition
+at a time), each bulk-INSERTed through a registered view — the
+analogue of the reference's Appender API (duckdb.rs:16-76). Timestamps
+are cast to ``timestamp_ntz`` in the Spark plan first, so they land as
+their wall time in the session time zone (UTC), whatever the driver's
+``TZ``. For server-grade parallelism use the JDBC path.
 
 Parity:
 * schema via ``DESCRIBE`` (duckdb.rs:140-192)
@@ -21,8 +24,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tinyetl_spark.io.arrow_stream import iter_batches
 
 _SPARK_TO_DUCK = [
     (T.StringType, "TEXT"),
@@ -96,43 +103,36 @@ def read_table(
     return out
 
 
-def write_table(
-    df: DataFrame, db_path: str, table: str, truncate: bool = False, batch_rows: int = 50_000
-) -> int:
-    """Append-first write with auto-DDL. Rows stream through
-    ``toLocalIterator`` (pickled, one partition at a time) into pandas
-    frames of up to ``batch_rows`` rows; each frame is registered as a
-    view and bulk-INSERTed (the Appender-equivalent path). Returns rows
-    written."""
+def write_table(df: DataFrame, db_path: str, table: str, truncate: bool = False) -> int:
+    """Append-first write with auto-DDL. Arrow batches stream one
+    partition at a time; each is registered as a view and
+    bulk-INSERTed (the Appender-equivalent path). The truncate and the
+    inserts commit together, so a failed write commits no rows.
+    Returns rows written."""
     import duckdb
-    import pandas as pd
 
     os.makedirs(os.path.dirname(os.path.abspath(db_path)) or ".", exist_ok=True)
-    ddl_cols = ", ".join(f'"{f.name}" {_duck_type(f.dataType)}' for f in df.schema.fields)
+    fields = df.schema.fields
+    ddl_cols = ", ".join(f'"{f.name}" {_duck_type(f.dataType)}' for f in fields)
+    cols = ", ".join(f'"{f.name}"' for f in fields)
+    # positional names: the projection never parses a user column name
+    pos = [f"_{i}" for i in range(len(fields))]
+    landed = df.toDF(*pos).select(
+        *(F.col(p).cast("timestamp_ntz") if isinstance(f.dataType, T.TimestampType) else F.col(p)
+          for p, f in zip(pos, fields))
+    )
     con = duckdb.connect(db_path)
     written = 0
     try:
         con.execute(f'CREATE TABLE IF NOT EXISTS "{table}" ({ddl_cols})')
+        con.execute("BEGIN TRANSACTION")
         if truncate:
             con.execute(f'DELETE FROM "{table}"')
-        cols = ", ".join(f'"{c}"' for c in df.columns)
-        buf: list[tuple] = []
-
-        def flush(rows: list[tuple]) -> None:
-            if not rows:
-                return
-            pdf = pd.DataFrame(rows, columns=df.columns)
-            con.register("_tinyetl_batch", pdf)
+        for batch in iter_batches(landed):
+            con.register("_tinyetl_batch", pa.Table.from_batches([batch]))
             con.execute(f'INSERT INTO "{table}" ({cols}) SELECT * FROM _tinyetl_batch')
-            con.unregister("_tinyetl_batch")
-
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            buf.append(tuple(row))
-            written += 1
-            if len(buf) >= batch_rows:
-                flush(buf)
-                buf = []
-        flush(buf)
+            written += batch.num_rows
+        con.execute("COMMIT")
     finally:
         con.close()
     return written

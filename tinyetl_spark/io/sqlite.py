@@ -4,16 +4,17 @@ There is no sqlite JDBC driver jar in this environment, and SQLite is a
 single-writer embedded database anyway — parallel executor writes would
 serialize on the file lock. So this connector is deliberately
 DRIVER-SIDE (SURVEY.md §7.4): reads stream in bounded chunks into Arrow
-→ Spark; writes stream ``toLocalIterator()`` rows into chunked
-multi-row INSERTs. Rows cross the driver one partition at a time, never
-all at once. For a server-grade parallel path use the JDBC connectors.
+→ Spark; writes stream Arrow record batches (:mod:`.arrow_stream`) into
+chunked multi-row INSERTs. Rows cross the driver one partition at a
+time, never all at once. For a server-grade parallel path use the JDBC
+connectors.
 
 Writes are bind-ready before they leave Spark: one projection in the
 plan renders every column as the value sqlite3 binds (timestamps as
 RFC3339 text in the session time zone, dates as ``yyyy-MM-dd``,
-booleans as 0/1, decimals as doubles, nested values as JSON text), so
-the driver loop only slices the row stream into full-width INSERTs and
-never touches a value.
+booleans as 0/1, decimals as doubles, nested values as JSON text). The
+driver turns each batch column into Python values in one numpy pass,
+zips the columns into rows and slices them into full-width INSERTs.
 
 Parity with the reference (src/connectors/sqlite.rs):
 * schema from ``PRAGMA table_info`` (sqlite.rs:76-101)
@@ -30,9 +31,12 @@ import os
 import sqlite3
 from itertools import chain, islice
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tinyetl_spark.io.arrow_stream import iter_batches
 
 MAX_BIND_VARS = 900
 
@@ -132,6 +136,20 @@ def _bindable(c: Column, dt: T.DataType) -> Column:
     return c
 
 
+def _values(arr: pa.Array) -> list:
+    """``arr`` as the Python values sqlite3 binds, ``None`` for NULL.
+
+    ``to_numpy`` would widen a numeric column with NULLs to float64
+    (``2**53 + 1`` becomes ``9007199254740992.0``) and turn NULL into
+    NaN, so such a column is filled, converted to objects and masked.
+    """
+    if arr.null_count and (pa.types.is_integer(arr.type) or pa.types.is_floating(arr.type)):
+        values = arr.fill_null(0).to_numpy().astype(object)
+        values[arr.is_null().to_numpy(zero_copy_only=False)] = None
+        return values.tolist()
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
 def write_table(
     df: DataFrame,
     db_path: str,
@@ -158,7 +176,9 @@ def write_table(
         con.execute(f'CREATE TABLE IF NOT EXISTS "{table}" ({ddl_cols})')
         if truncate:
             con.execute(f'DELETE FROM "{table}"')
-        rows = bindable.toLocalIterator(prefetchPartitions=True)
+        rows = chain.from_iterable(
+            zip(*map(_values, batch.columns)) for batch in iter_batches(bindable)
+        )
         while chunk := list(islice(rows, rows_per_stmt)):
             n = len(chunk)
             stmt = full_stmt if n == rows_per_stmt else insert + ", ".join([placeholders] * n)
