@@ -101,6 +101,20 @@ def _sentinel(spark) -> float | None:
     return round(best, 4)
 
 
+def memo_record(events: list[tuple[str, str, float]]) -> dict:
+    """One rep's artifact-store accesses: the names it built, the names
+    it hit, and the seconds it spent building each built name."""
+    build_s: dict[str, float] = {}
+    for kind, name, seconds in events:
+        if kind == "build":
+            build_s[name] = round(build_s.get(name, 0.0) + seconds, 4)
+    return {
+        "built": sorted(build_s),
+        "hit": sorted({name for kind, name, _ in events if kind == "hit"}),
+        "build_s": build_s,
+    }
+
+
 def _run_shard(names: list[str]) -> dict:
     """Time one shard of queries in THIS process's (fresh) JVM."""
     from tinyetl_spark.queries import QUERIES
@@ -135,16 +149,12 @@ def _run_shard(names: list[str]) -> dict:
     reps_detail: dict[str, list[float]] = {}
     memo_detail: dict[str, list[dict]] = {}
     failures: dict[str, str] = {}
-    # Memo honesty (r12 verdict item 2): queries.MEMO_EVENTS records
-    # every per-process train-memo access. Snapshot it around each rep
-    # so the sidecar labels reps that BUILT a shared train (cold — the
-    # wall a fresh production run pays) vs reps that read one built
-    # earlier in the shard (warm). `best` stays min-over-reps (the
-    # steady-state number); the judge can quote the cold rep from
-    # `memo`, which lists per-rep {built: [...], hit: [...]}.
-    from tinyetl_spark import queries as _qmod
-
-    _memo_events = getattr(_qmod, "MEMO_EVENTS", None)
+    # The artifact store logs every access to a shared artifact. Its
+    # log is drained around each rep, so `memo[name][i]` says whether
+    # rep i BUILT a shared artifact (cold: the wall a fresh production
+    # run pays) or reused one built earlier in the shard (warm). `best`
+    # stays min-over-reps (the steady-state number).
+    from tinyetl_spark.artifacts import drain_events
     # best-of-2, plus an ADAPTIVE third rep when the first two disagree
     # by >25%: back-to-back same-code runs on this host drift ±25% on a
     # minutes scale (shared-VM noise — the r7 driver ran a near-uniform
@@ -167,20 +177,13 @@ def _run_shard(names: list[str]) -> dict:
                 # queries do real work eagerly (round-trip writes,
                 # candidate-table materialization) — starting the clock
                 # after fn() would hide it
-                _ev0 = len(_memo_events) if _memo_events is not None else 0
+                drain_events()
                 t0 = time.perf_counter()
                 df = fn(spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
                 elapsed = time.perf_counter() - t0
                 reps_detail.setdefault(name, []).append(round(elapsed, 4))
-                if _memo_events is not None and len(_memo_events) > _ev0:
-                    new_ev = _memo_events[_ev0:]
-                    memo_detail.setdefault(name, []).append(
-                        {
-                            "built": sorted({m for k, m in new_ev if k == "build"}),
-                            "hit": sorted({m for k, m in new_ev if k == "hit"}),
-                        }
-                    )
+                memo_detail.setdefault(name, []).append(memo_record(drain_events()))
                 best = elapsed if best is None else min(best, elapsed)
                 reps = reps_detail[name]
                 if (

@@ -78,10 +78,7 @@ def test_duckdb_read_values_match(spark, tmp_path):
 
 def test_snowflake_mock_roundtrip(spark, tmp_path):
     # target: stages parquet + logs simulated PUT/COPY (no error)
-    st = transfer(
-        spark, "/root/testdata/sf0.001/region.parquet",
-        "snowflake://account/db#regions",
-    )
+    st = transfer(spark, _write_region(tmp_path), "snowflake://account/db#regions")
     assert st.rows_transferred == 5
     # source: simulated COPY INTO export produces the 2-row sample
     out = str(tmp_path / "sf.parquet")

@@ -10,6 +10,7 @@ import math
 import os
 import sqlite3
 import time
+from decimal import Decimal
 
 import duckdb
 import pyarrow as pa
@@ -154,26 +155,26 @@ def test_sqlite_type_sweep(spark, tmp_path, sweep):
 def test_duckdb_type_sweep(spark, tmp_path, sweep):
     """Arrow carries each value as Spark holds it: bigint keeps all 64
     bits beside a NULL (not widened through float64), NaN stays apart
-    from NULL, a struct's text keeps its field names, and a smallint
-    beside a NULL renders as ``3``, not ``3.0``."""
+    from NULL, every integral type lands as BIGINT, and arrays, structs
+    and maps land as the JSON text the SQLite sink writes."""
     db = str(tmp_path / "sweep.duckdb")
     assert duckdb_io.write_table(sweep, db, "t") == 3
     con = duckdb.connect(db, read_only=True)
     decl = [(r[0], r[1]) for r in con.execute("DESCRIBE t").fetchall()]
     assert decl == list(zip(SWEEP_COLS, [
         "BIGINT", "BIGINT", "DOUBLE", "BLOB", "BOOLEAN", "DOUBLE", "DATE", "TIMESTAMP",
-        "TIMESTAMP", "VARCHAR", "VARCHAR", "VARCHAR", "VARCHAR", "VARCHAR", "VARCHAR", "BIGINT",
+        "TIMESTAMP", "JSON", "JSON", "JSON", "VARCHAR", "BIGINT", "BIGINT", "BIGINT",
         "DOUBLE", "DOUBLE"]))
     got = [_nan_as_text(r) for r in con.execute("SELECT * FROM t ORDER BY k").fetchall()]
     con.close()
     assert got == [
         (1, 9007199254740993, "NaN", b"\x00\xff", True, 12.34, dt.date(2024, 1, 1),
-         dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 1, 0, 0, 0, 123456), "[1, 2]",
-         "{'a': 1, 'b': x}", "{k=2.5}", "héllo", "3", "-4", 7, 1.5, 2.5),
+         dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 1, 0, 0, 0, 123456), "[1,2]",
+         '{"a":1,"b":"x"}', '{"k":2.5}', "héllo", 3, -4, 7, 1.5, 2.5),
         (2,) + (None,) * 17,
         (3, -5, 1.100000023841858, b"", False, -0.5, dt.date(1969, 12, 31),
          dt.datetime(2024, 6, 30, 23, 59, 59, 500000), dt.datetime(1960, 1, 1), "[]",
-         "{'a': NULL, 'b': NULL}", "{}", "", "0", "0", 0, "NaN", 0.0),
+         "{}", "{}", "", 0, 0, 0, "NaN", 0.0),
     ]
     empty = str(tmp_path / "empty.duckdb")
     assert duckdb_io.write_table(sweep.limit(0), empty, "t") == 0
@@ -181,6 +182,33 @@ def test_duckdb_type_sweep(spark, tmp_path, sweep):
     assert [(r[0], r[1]) for r in con.execute("DESCRIBE t").fetchall()] == decl
     assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 0
     con.close()
+
+
+def test_duckdb_read_table_keeps_types_and_values(spark, tmp_path, sweep):
+    """``read_table`` gives each column the Spark type of its DuckDB
+    column: a nullable BIGINT stays exact with its NULL (not a double
+    with NaN), and a DECIMAL keeps its precision and scale."""
+    db = str(tmp_path / "rt.duckdb")
+    duckdb_io.write_table(sweep, db, "t")
+    back = duckdb_io.read_table(spark, db, "t")
+    assert back.dtypes == list(zip(SWEEP_COLS, [
+        "bigint", "bigint", "double", "binary", "boolean", "double", "date", "timestamp",
+        "timestamp", "string", "string", "string", "string", "bigint", "bigint", "bigint",
+        "double", "double"]))
+    want = sweep.select(*(
+        F.to_json(c) if c in ("arr", "st", "m") else F.col(f"`{c}`").cast(t)
+        for c, t in back.dtypes
+    ))
+    assert back.exceptAll(want).count() == 0 and want.exceptAll(back).count() == 0
+    assert back.filter("k = 1").first().big == 2**53 + 1
+    duckdb_io.write_table(sweep.limit(0), str(tmp_path / "empty.duckdb"), "t")
+    assert duckdb_io.read_table(spark, str(tmp_path / "empty.duckdb"), "t").dtypes == back.dtypes
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE d AS SELECT CAST(12.34 AS DECIMAL(10,2)) AS dec UNION ALL SELECT NULL")
+    con.close()
+    d = duckdb_io.read_table(spark, db, "d")
+    assert d.dtypes == [("dec", "decimal(10,2)")]
+    assert sorted(d.collect(), key=lambda r: r.dec is None) == [(Decimal("12.34"),), (None,)]
 
 
 @pytest.mark.parametrize("driver_tz", ["UTC", "America/New_York"], indirect=True)

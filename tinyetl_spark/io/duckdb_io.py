@@ -4,19 +4,22 @@ Like SQLite, DuckDB is an embedded single-file database — the
 reference drives it in-process behind a mutex (duckdb.rs:118-128), and
 the honest Spark equivalent is a DRIVER-side connector streaming
 bounded chunks (the duckdb Python module is in-container; there is no
-JDBC jar). Reads use DuckDB's Arrow fast path in record batches;
-writes stream Arrow record batches (:mod:`.arrow_stream`, one partition
-at a time), each bulk-INSERTed through a registered view — the
-analogue of the reference's Appender API (duckdb.rs:16-76). Timestamps
-are cast to ``timestamp_ntz`` in the Spark plan first, so they land as
-their wall time in the session time zone (UTC), whatever the driver's
-``TZ``. For server-grade parallelism use the JDBC path.
+JDBC jar). Reads fetch the table as one Arrow table; writes stream
+Arrow record batches (:mod:`.arrow_stream`, one partition at a time),
+each bulk-INSERTed through a registered view — the analogue of the
+reference's Appender API (duckdb.rs:16-76). Timestamps are cast to
+``timestamp_ntz`` in the Spark plan first, so they land as their wall
+time in the session time zone (UTC), whatever the driver's ``TZ``;
+arrays, structs and maps are rendered with ``to_json`` in the same
+projection, the text the SQLite sink writes. For server-grade
+parallelism use the JDBC path.
 
 Parity:
 * schema via ``DESCRIBE`` (duckdb.rs:140-192)
 * auto-DDL ``CREATE TABLE IF NOT EXISTS`` with the reference's type map
-  (duckdb.rs:393-406): string→TEXT, integer→BIGINT, decimal→DOUBLE,
-  boolean→BOOLEAN, date/datetime→TIMESTAMP, json→JSON
+  (duckdb.rs:393-406): string→TEXT, every integer→BIGINT,
+  decimal→DOUBLE, boolean→BOOLEAN, date/datetime→TIMESTAMP,
+  array/struct/map→JSON
 * truncate = ``DELETE FROM``; append supported
 """
 
@@ -25,16 +28,16 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tinyetl_spark.io.arrow_stream import iter_batches
 
+_NESTED = (T.ArrayType, T.StructType, T.MapType)
 _SPARK_TO_DUCK = [
     (T.StringType, "TEXT"),
-    (T.LongType, "BIGINT"),
-    (T.IntegerType, "BIGINT"),
+    (T.IntegralType, "BIGINT"),
     (T.BooleanType, "BOOLEAN"),
     (T.DoubleType, "DOUBLE"),
     (T.FloatType, "DOUBLE"),
@@ -43,6 +46,7 @@ _SPARK_TO_DUCK = [
     (T.TimestampNTZType, "TIMESTAMP"),
     (T.DateType, "DATE"),
     (T.BinaryType, "BLOB"),
+    (_NESTED, "JSON"),
 ]
 
 
@@ -51,6 +55,14 @@ def _duck_type(dt: T.DataType) -> str:
         if isinstance(dt, cls):
             return name
     return "TEXT"
+
+
+def _landed(c: Column, dt: T.DataType) -> Column:
+    if isinstance(dt, T.TimestampType):
+        return c.cast("timestamp_ntz")
+    if isinstance(dt, _NESTED):
+        return F.to_json(c)
+    return c
 
 
 def table_exists(db_path: str, table: str) -> bool:
@@ -69,38 +81,19 @@ def table_exists(db_path: str, table: str) -> bool:
         con.close()
 
 
-def read_table(
-    spark: SparkSession, db_path: str, table: str, batch_rows: int = 100_000
-) -> DataFrame:
-    """Arrow-batched read: DuckDB → RecordBatch → Spark."""
+def read_table(spark: SparkSession, db_path: str, table: str) -> DataFrame:
+    """The table fetched as one Arrow table, so each column keeps its
+    type: a nullable BIGINT stays exact and its NULLs stay NULL, and a
+    DECIMAL keeps its precision and scale."""
     import duckdb
 
     if not os.path.exists(db_path):
         raise FileNotFoundError(f"DuckDB file not found: {db_path}")
     con = duckdb.connect(db_path, read_only=True)
     try:
-        reader = con.execute(f'SELECT * FROM "{table}"').fetch_record_batch(batch_rows)
-        frames = []
-        while True:
-            try:
-                batch = reader.read_next_batch()
-            except StopIteration:
-                break
-            if batch.num_rows:
-                frames.append(spark.createDataFrame(batch.to_pandas()))
-        if not frames:
-            import pyarrow as pa
-
-            empty = reader.schema.empty_table() if hasattr(reader.schema, "empty_table") else pa.table(
-                {f.name: [] for f in reader.schema}
-            )
-            return spark.createDataFrame(empty.to_pandas())
+        return spark.createDataFrame(con.execute(f'SELECT * FROM "{table}"').arrow())
     finally:
         con.close()
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def write_table(df: DataFrame, db_path: str, table: str, truncate: bool = False) -> int:
@@ -117,10 +110,7 @@ def write_table(df: DataFrame, db_path: str, table: str, truncate: bool = False)
     cols = ", ".join(f'"{f.name}"' for f in fields)
     # positional names: the projection never parses a user column name
     pos = [f"_{i}" for i in range(len(fields))]
-    landed = df.toDF(*pos).select(
-        *(F.col(p).cast("timestamp_ntz") if isinstance(f.dataType, T.TimestampType) else F.col(p)
-          for p, f in zip(pos, fields))
-    )
+    landed = df.toDF(*pos).select(*(_landed(F.col(p), f.dataType) for p, f in zip(pos, fields)))
     con = duckdb.connect(db_path)
     written = 0
     try:

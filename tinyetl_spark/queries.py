@@ -18,8 +18,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
+from tinyetl_spark.artifacts import memo, roundtrip_dir, staged, staged_path
 from tinyetl_spark.functions.dates import FORMATS, parse_date_multi, parse_date_multi_sql
 from tinyetl_spark.functions.hashing import hash64_col, hash64_sql
 from tinyetl_spark.operators import (
@@ -83,10 +83,6 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
             spark.conf.set(key, want)
 
 
-# kept as an alias for call sites that read events.parquet directly
-_ensure_nanos_conf = _ensure_runtime_confs
-
-
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the events ``ts`` column to a plain µs TIMESTAMP
     regardless of how this Spark version surfaced the parquet
@@ -106,25 +102,20 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# (path, st_mtime_ns, st_size) -> the schema Spark inferred for that file
-_FILE_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a testdata table, normalizing nanosecond parquet timestamps
     to a plain µs TIMESTAMP (see _normalize_events_ts).
 
     Spark infers a Parquet schema with a job that reads the footer
     (about 50 ms even for one file), so the first read of a file keeps
-    the inferred schema in ``_FILE_SCHEMAS`` and later reads pass it
+    the inferred schema in the artifact store and later reads pass it
     through ``spark.read.schema``, which runs no job. The key is the
     path with the file's mtime and size, so a rewritten file is inferred
-    again. The memo holds a plain StructType and no Spark state: it is
-    valid in any session of the process, and every read still builds a
-    new relation with fresh attribute ids, so self-joins stay safe. The
-    schema is the raw file schema (``ts`` as Spark read it), and the
-    events normalization runs on every read. A path ``os.stat`` cannot
-    reach (a remote URL) is inferred on every read."""
+    again. Every read still builds a new relation with fresh attribute
+    ids, so self-joins stay safe. The schema is the raw file schema
+    (``ts`` as Spark read it), and the events normalization runs on
+    every read. A path ``os.stat`` cannot reach (a remote URL) is
+    inferred on every read."""
     _ensure_runtime_confs(spark)
     path = f"{sf_dir}/{table}.parquet"
     try:
@@ -133,12 +124,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         df = spark.read.parquet(path)  # Spark reports a missing path
     else:
         key = (path, st.st_mtime_ns, st.st_size)
-        schema = _FILE_SCHEMAS.get(key)
-        if schema is None:
-            df = spark.read.parquet(path)
-            _FILE_SCHEMAS[key] = df.schema
-        else:
-            df = spark.read.schema(schema).parquet(path)
+        schema = memo(spark, "schema", key, lambda: spark.read.parquet(path).schema)
+        df = spark.read.schema(schema).parquet(path)
     return _normalize_events_ts(df) if table == "events" else df
 
 
@@ -2524,7 +2511,7 @@ def winnow_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpus never shuffles. Consumes the STAGED fingerprint
     table (production shape: fingerprints are computed at ingest and
     every decontam / clone-detection pass reads them)."""
-    fps = _stage_once_df(
+    fps = staged(
         spark,
         sf_dir,
         "winnow_fps",
@@ -2616,8 +2603,8 @@ def decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     three flag sets are tiny relative to the corpus and staged once;
     the report is two full-outer joins over them."""
     def _flags(name: str, sql: str, build, col: str) -> DataFrame:
-        staged = _stage_once_df(spark, sf_dir, name, sql, build)
-        return staged.select("doc_id").distinct().withColumn(col, F.lit(True))
+        ids = staged(spark, sf_dir, name, sql, build).select("doc_id").distinct()
+        return ids.withColumn(col, F.lit(True))
 
     docs = load(spark, sf_dir, "documents")
     o = _flags(
@@ -2632,7 +2619,7 @@ def decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: text.winnow_decontam(docs),
         "winnow_hit",
     )
-    fz_pairs = _stage_once_df(
+    fz_pairs = staged(
         spark,
         sf_dir,
         "fuzzy_decontam_pairs",
@@ -3212,7 +3199,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 7.4 s vs 0.9 s staged); the cold training loop itself is
     # measured by bpe_train_merges (r12: every encode consumer now
     # shares the one memoized train per process)
-    enc = _stage_once_df(
+    enc = staged(
         spark,
         sf_dir,
         "bpe_encoded",
@@ -3263,69 +3250,21 @@ def unigram_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenizer.unigram_train(load(spark, sf_dir, "documents"))
 
 
-_UNI_STATE_CACHE: dict[tuple[str, str], tuple] = {}
-_UNI_PRUNE_STATE_CACHE: dict[tuple[str, str], tuple] = {}
-
-# Bench-honesty hook (r12 verdict item 2): every per-process memo getter
-# appends ("build"|"hit", memo_name) here on each access. bench.py
-# snapshots the list around each timed rep, so the sidecar can label
-# reps that PAID for a shared train ("build" = cold) vs reps that read
-# one built earlier in the process ("hit" = warm) — the cold first-rep
-# wall is the number a fresh production run pays, and the judge can
-# quote both. Append-only within a process; never read by query code.
-MEMO_EVENTS: list[tuple[str, str]] = []
-
-
-def _memo_access(name: str, built: bool) -> None:
-    MEMO_EVENTS.append(("build" if built else "hit", name))
-
-
-def _evict_stale_app_keys(cache: dict, app_id: str) -> None:
-    """Drop entries keyed to a stopped SparkContext (ADVICE r12: stale
-    applicationIds pin dead localCheckpoint-backed DataFrames for the
-    process lifetime). Called on every miss, so each (appId, sf_dir)
-    cache holds only the live context's entries."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-
-
 def _shared_unigram_state(spark: SparkSession, sf_dir: str) -> tuple:
-    """ONE unigram EM train per process: the seed + Viterbi-EM chain is
+    """ONE unigram EM train per context: the seed + Viterbi-EM chain is
     deterministic per corpus, so every CONSUMER of the trained model
     (encode, ambiguity, the staged encoded table) reads the same
-    (costs, usage, word-freq checkpoint) state — the train-once/
-    ship-to-every-encode contract the WordPiece/BPE tiers adopted in
-    r12. The TRAINER query (unigram_train_vocab) never reads this: its
-    result IS the training run. Keyed by (applicationId, sf_dir)
-    because the state holds a localCheckpoint whose lifetime is the
-    SparkContext (same contract as _shared_wordpiece_state)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _memo_access("unigram_state", key not in _UNI_STATE_CACHE)
-    if key not in _UNI_STATE_CACHE:
-        _evict_stale_app_keys(_UNI_STATE_CACHE, key[0])
-        _UNI_STATE_CACHE[key] = tokenizer._uni_train_state(
+    (costs, usage, word-freq checkpoint) state. The TRAINER query
+    (unigram_train_vocab) never reads this: its result IS the training
+    run."""
+    return memo(
+        spark,
+        "unigram_state",
+        (sf_dir,),
+        lambda: tokenizer._uni_train_state(
             load(spark, sf_dir, "documents"), "text", tokenizer.UNI_EM_ITERS
-        )
-    return _UNI_STATE_CACHE[key]
-
-
-def _shared_unigram_prune_state(spark: SparkSession, sf_dir: str) -> tuple:
-    """The prune-trained twin of _shared_unigram_state (seed 64 ->
-    prune to 32): consumers of the PRUNED model share one train per
-    process; unigram_prune_vocab (the trainer) always trains."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _memo_access("unigram_prune_state", key not in _UNI_PRUNE_STATE_CACHE)
-    if key not in _UNI_PRUNE_STATE_CACHE:
-        _evict_stale_app_keys(_UNI_PRUNE_STATE_CACHE, key[0])
-        _UNI_PRUNE_STATE_CACHE[key] = tokenizer._uni_prune_state(
-            load(spark, sf_dir, "documents"),
-            "text",
-            tokenizer.UNI_EM_ITERS,
-            tokenizer.UNI_SEED_VOCAB,
-            tokenizer.UNI_VOCAB,
-            tokenizer.UNI_PRUNE_STEPS,
-        )
-    return _UNI_PRUNE_STATE_CACHE[key]
+        ),
+    )
 
 
 @_q("unigram_encode_docs", tokenizer.unigram_train_encode_sql())
@@ -3347,7 +3286,7 @@ def unigram_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _materialized_unigram_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "unigram_encoded",
@@ -3375,21 +3314,6 @@ def unigram_prune_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     (13/32 multi-char survivors differ at sf0.001 — pruning genuinely
     reshapes the vocabulary vs raw substring frequency)."""
     return tokenizer.unigram_prune_train(load(spark, sf_dir, "documents"))
-
-
-def _materialized_unigram_pruned_encoded(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _stage_once_df(
-        spark,
-        sf_dir,
-        "unigram_pruned_encoded",
-        tokenizer.unigram_prune_encode_sql(),
-        lambda: tokenizer.unigram_prune_encode(
-            load(spark, sf_dir, "documents"),
-            state=_shared_unigram_prune_state(spark, sf_dir),
-        ).select("doc_id", "n_tokens", F.concat_ws(" ", "tokens").alias("tokens")),
-    )
 
 
 @_q("wordpiece_train_merges", tokenizer.wordpiece_train_sql())
@@ -3437,46 +3361,36 @@ def wordpiece_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WP_VOCAB_CACHE: dict[str, list[str]] = {}
-_WP_STATE_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _shared_wordpiece_state(spark: SparkSession, sf_dir: str) -> tuple:
-    """ONE WordPiece train per process, at the LARGEST budget any
+    """ONE WordPiece train per context, at the LARGEST budget any
     consumer needs (max(WP_BUDGET_MERGES)=24): merges are prefix-nested
     (iteration i depends only on merges 1..i-1 — pinned by
     test_wordpiece_train_prefix_nesting), so the 12-merge training
     query is rows 1..12 of this state, the frozen 12-merge encode
     vocabulary replays the first 12 folds over the retained base, and
-    the budget curve reads the state whole. Keyed by (applicationId,
-    sf_dir) because the state holds localCheckpoint references whose
-    lifetime is the SparkContext (same contract as
-    _trained_classifier)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _memo_access("wordpiece_state", key not in _WP_STATE_CACHE)
-    if key not in _WP_STATE_CACHE:
-        _evict_stale_app_keys(_WP_STATE_CACHE, key[0])
-        _WP_STATE_CACHE[key] = tokenizer.wp_train_state_full(
-            load(spark, sf_dir, "documents"),
-            "text",
-            max(tokenizer.WP_BUDGET_MERGES),
-        )
-    return _WP_STATE_CACHE[key]
+    the budget curve reads the state whole."""
+    return memo(
+        spark,
+        "wordpiece_state",
+        (sf_dir,),
+        lambda: tokenizer.wp_train_state_full(
+            load(spark, sf_dir, "documents"), "text", max(tokenizer.WP_BUDGET_MERGES)
+        ),
+    )
 
 
 def _trained_wordpiece_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Frozen-tokenizer memo: WordPiece training is deterministic per
-    corpus, so the vocabulary trains once per sf_dir (same contract as
-    _trained_bpe_merges). Derived from the shared max-budget train
-    state: the WP_MERGES-fold symbol table is replayed (zero training
-    jobs) off the shared base — value-identical to a direct
+    """The frozen WP_MERGES vocabulary, replayed (zero training jobs)
+    off the shared max-budget train state: value-identical to a direct
     WP_MERGES-merge train by prefix nesting."""
-    _memo_access("wordpiece_vocab", sf_dir not in _WP_VOCAB_CACHE)
-    if sf_dir not in _WP_VOCAB_CACHE:
+
+    def build() -> list[str]:
         merges, base, _ = _shared_wordpiece_state(spark, sf_dir)
-        cur = tokenizer.wp_replay_merges(base, merges, tokenizer.WP_MERGES)
-        _WP_VOCAB_CACHE[sf_dir] = tokenizer._wp_vocab(cur)
-    return _WP_VOCAB_CACHE[sf_dir]
+        return tokenizer._wp_vocab(
+            tokenizer.wp_replay_merges(base, merges, tokenizer.WP_MERGES)
+        )
+
+    return memo(spark, "wordpiece_vocab", (sf_dir,), build)
 
 
 @_q("wordpiece_encode_batch_docs", tokenizer.wordpiece_train_encode_sql())
@@ -3540,23 +3454,6 @@ def wordpiece_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized_wordpiece_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # encode under the memoized frozen vocabulary (_trained_wordpiece_
-    # vocab) instead of wordpiece_train_encode's own training pass —
-    # value-identical (same word dictionary, same greedy fold), but the
-    # base and byte-fallback stages now share ONE train per process
-    return _stage_once_df(
-        spark,
-        sf_dir,
-        "wordpiece_encoded",
-        tokenizer.wordpiece_train_encode_sql(),
-        lambda: tokenizer.wordpiece_encode(
-            load(spark, sf_dir, "documents"),
-            _trained_wordpiece_vocab(spark, sf_dir),
-        ).select("doc_id", "n_tokens", F.concat_ws(" ", "tokens").alias("tokens")),
-    )
-
-
 @_q("unigram_ambiguity", tokenizer.unigram_ambiguity_sql())
 def unigram_ambiguity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segmentation-ambiguity profile under the trained unigram LM —
@@ -3602,11 +3499,8 @@ def tokenized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _materialized_wordpiece_bf_encoded(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # same frozen-vocab sharing as _materialized_wordpiece_encoded:
     # wordpiece_bf_train_encode would re-run the full training loop;
-    # restrict the memoized vocab and encode — identical values (the
-    # round-11 verdict flagged this as the suspected duplicated work
-    # behind the wordpiece_train_merges wall-time watch item)
+    # restrict the memoized vocab and encode instead: identical values
     def _build() -> DataFrame:
         vocab = tokenizer.wordpiece_restrict_vocab(
             _trained_wordpiece_vocab(spark, sf_dir)
@@ -3620,7 +3514,7 @@ def _materialized_wordpiece_bf_encoded(
             F.concat_ws(" ", "tokens").alias("tokens"),
         )
 
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "wordpiece_bf_encoded",
@@ -3756,7 +3650,7 @@ def tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("_nl").cast("bigint").alias("unk_tokens"),
     ).localCheckpoint(eager=False)
     tot = tot_all.select("total_words", "total_chars")
-    encb = _stage_once_df(
+    encb = staged(
         spark,
         sf_dir,
         "bpe_encoded",
@@ -3768,8 +3662,42 @@ def tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     encu = _materialized_unigram_encoded(spark, sf_dir)
-    encp = _materialized_unigram_pruned_encoded(spark, sf_dir)
-    encw = _materialized_wordpiece_encoded(spark, sf_dir)
+    encp = staged(
+        spark,
+        sf_dir,
+        "unigram_pruned_encoded",
+        tokenizer.unigram_prune_encode_sql(),
+        lambda: tokenizer.unigram_prune_encode(
+            load(spark, sf_dir, "documents"),
+            state=memo(
+                spark,
+                "unigram_prune_state",
+                (sf_dir,),
+                lambda: tokenizer._uni_prune_state(
+                    load(spark, sf_dir, "documents"),
+                    "text",
+                    tokenizer.UNI_EM_ITERS,
+                    tokenizer.UNI_SEED_VOCAB,
+                    tokenizer.UNI_VOCAB,
+                    tokenizer.UNI_PRUNE_STEPS,
+                ),
+            ),
+        ).select("doc_id", "n_tokens", F.concat_ws(" ", "tokens").alias("tokens")),
+    )
+    # encode under the memoized frozen vocabulary instead of
+    # wordpiece_train_encode's own training pass: value-identical (same
+    # word dictionary, same greedy fold), and the base and byte-fallback
+    # stages share ONE train
+    encw = staged(
+        spark,
+        sf_dir,
+        "wordpiece_encoded",
+        tokenizer.wordpiece_train_encode_sql(),
+        lambda: tokenizer.wordpiece_encode(
+            load(spark, sf_dir, "documents"),
+            _trained_wordpiece_vocab(spark, sf_dir),
+        ).select("doc_id", "n_tokens", F.concat_ws(" ", "tokens").alias("tokens")),
+    )
     encf = _materialized_wordpiece_bf_encoded(spark, sf_dir)
 
     def one(name: str, t: DataFrame) -> DataFrame:
@@ -3863,7 +3791,7 @@ def trigram_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     contains() — grep over the corpus without a full text scan. The
     oracle is the straight scan, so the index path must lose nothing."""
     docs = load(spark, sf_dir, "documents")
-    idx = _stage_once_df(
+    idx = staged(
         spark,
         sf_dir,
         "trigram_index",
@@ -4082,47 +4010,37 @@ def inference_batches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.inference_batches(load(spark, sf_dir, "documents"))
 
 
-_CLASSIFIER_CACHE: dict[tuple[str, str], tuple] = {}
-_SCORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _scored_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score-once memo: the four evaluation queries (AUC summary,
     calibration, threshold curve, source bias) share ONE margin
     aggregation over the feature table per corpus — at 100x the
     margin join+groupBy dominated each call (14.8 s of
     calibration_bins' 14.8 s), so the scored base is the thing to
-    memoize, not just the model. Same (applicationId, sf_dir) keying
-    and localCheckpoint-lifetime caveat as _trained_classifier."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _memo_access("scored_classifier", key not in _SCORED_CACHE)
-    if key not in _SCORED_CACHE:
-        _evict_stale_app_keys(_SCORED_CACHE, key[0])
-        from tinyetl_spark.operators.classifier import _scored
+    memoize, not just the model."""
+    from tinyetl_spark.operators.classifier import _scored
 
-        _SCORED_CACHE[key] = _scored(
+    return memo(
+        spark,
+        "scored_classifier",
+        (sf_dir,),
+        lambda: _scored(
             load(spark, sf_dir, "documents"),
             "text",
             "doc_id",
             _trained_classifier(spark, sf_dir),
-        ).localCheckpoint()
-    return _SCORED_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 def _trained_classifier(spark: SparkSession, sf_dir: str) -> tuple:
     """Train-once memo: the batch scorer and the streaming server share
-    one trained model per corpus, like a production model registry.
-    localCheckpoint lifetime == SparkContext lifetime, so the cache is
-    keyed by (applicationId, sf_dir) — a rebuilt context in the same
-    process gets a fresh train instead of dead checkpoint references."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _memo_access("classifier_model", key not in _CLASSIFIER_CACHE)
-    if key not in _CLASSIFIER_CACHE:
-        _evict_stale_app_keys(_CLASSIFIER_CACHE, key[0])
-        _CLASSIFIER_CACHE[key] = classifier.train_quality_classifier(
-            load(spark, sf_dir, "documents")
-        )
-    return _CLASSIFIER_CACHE[key]
+    one trained model per corpus, like a production model registry."""
+    return memo(
+        spark,
+        "classifier_model",
+        (sf_dir,),
+        lambda: classifier.train_quality_classifier(load(spark, sf_dir, "documents")),
+    )
 
 
 @_q("quality_classifier_docs", classifier.quality_classifier_sql())
@@ -4422,30 +4340,21 @@ def rho_select_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.rho_loss_select(load(spark, sf_dir, "documents"))
 
 
-_BPE_MERGES_CACHE: dict[str, list[tuple[int, str, str, int]]] = {}
-
-
-def _trained_bpe_rows(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, str, str, int]]:
-    """Frozen-tokenizer memo: training is deterministic per corpus, so
-    one process never trains the same sf_dir twice (the production
-    shape — a tokenizer is trained once and shipped to every encode).
-    Stores the full (rank, lsym, rsym, total) rows — already
-    driver-side in the training loop — so consumers never pay a
-    collect round-trip. Consumers only: `bpe_train_merges` itself
-    always trains (its result IS the training run)."""
-    _memo_access("bpe_merges", sf_dir not in _BPE_MERGES_CACHE)
-    if sf_dir not in _BPE_MERGES_CACHE:
-        docs = load(spark, sf_dir, "documents")
-        _BPE_MERGES_CACHE[sf_dir], _ = tokenizer._train(
-            docs, "text", tokenizer.BPE_MERGES
-        )
-    return _BPE_MERGES_CACHE[sf_dir]
-
-
 def _trained_bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    return [(a, b) for _, a, b, _ in _trained_bpe_rows(spark, sf_dir)]
+    """Frozen-tokenizer memo: training is deterministic per corpus, so
+    one context never trains the same sf_dir twice (the production
+    shape — a tokenizer is trained once and shipped to every encode).
+    Consumers only: `bpe_train_merges` itself always trains (its
+    result IS the training run)."""
+    rows = memo(
+        spark,
+        "bpe_merges",
+        (sf_dir,),
+        lambda: tokenizer._train(
+            load(spark, sf_dir, "documents"), "text", tokenizer.BPE_MERGES
+        )[0],
+    )
+    return [(a, b) for _, a, b, _ in rows]
 
 
 @_q("bpe_encode_batch_docs", tokenizer.bpe_train_encode_sql())
@@ -4681,60 +4590,13 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_recall_audit(load(spark, sf_dir, "documents"))
 
 
-def _stage_once(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    version_key: str,
-    build,
-    partition_by: list[str] | None = None,
-):
-    """Materialize an intermediate table to parquet ONCE per (sf_dir,
-    pipeline-version) — exactly what a 100 TB pipeline does between
-    stages (survives executor loss; downstream stages pay IO, not
-    recompute). The path embeds a hash of ``version_key`` (each
-    caller's oracle-SQL twin, which encodes every constant of the
-    producing pipeline), so any code change invalidates the cache
-    instead of silently reusing stale data."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(version_key.encode()).hexdigest()[:10]
-    path = _roundtrip_dir(sf_dir, f"{name}_{tag}.parquet")
-    _memo_access(f"stage:{name}", not os.path.exists(path))
-    if not os.path.exists(path):
-        # build into a private temp dir, then rename into place —
-        # atomic on POSIX, so a concurrent query process never reads a
-        # half-written parquet directory
-        tmp = f"{path}.tmp-{os.getpid()}"
-        writer = build().write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(path):
-                # not the lost-race case — surface the real failure
-                # instead of returning a path that doesn't exist
-                raise
-    return path
-
-
-def _stage_once_df(spark, sf_dir, name, version_key, build) -> DataFrame:
-    return spark.read.parquet(_stage_once(spark, sf_dir, name, version_key, build))
-
-
 def _materialized_candidates(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     """The verify stage references the LSH candidate table twice (id
     prefilter + pair join) and exchange reuse does not cross AQE
     subqueries — so the two-stage dedup pipelines write candidates to
     parquet between stages and every downstream query (jaccard verify,
     ngram verify) reads the same staged table."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "minhash_cands",
@@ -4750,7 +4612,7 @@ def _materialized_simhash_pairs(
     ``dedup_clusters`` and ``dedup_survivors`` both consume them, as a
     production pipeline would (pairs → clusters → survivors is one DAG
     with a materialization barrier after the pair join)."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "simhash_pairs",
@@ -4822,26 +4684,6 @@ def near_dup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard(docs, cands, threshold=0.2)
 
 
-def _materialized_containment_candidates(
-    spark: SparkSession, sf_dir: str, docs: DataFrame
-) -> DataFrame:
-    """Jaccard-LSH ∪ asymmetric-containment candidates, staged once.
-
-    The union generator (round-9 fix for the round-8 recall-bias flaw)
-    is what makes the containment verify able to reach its target pair
-    class: short-in-long pairs have J≈0.05 and band-collide with
-    P≈4J⁴≈2.5e-5 — only the asymmetric probe side can surface them
-    (dedup.containment_candidates: exact recall for verbatim
-    containment on the sampled shingle universe)."""
-    return _stage_once_df(
-        spark,
-        sf_dir,
-        "containment_cands",
-        dedup.ngram_containment_full_sql(threshold=0.8),
-        lambda: dedup.containment_union_candidates(docs),
-    )
-
-
 @_q("containment_dups", dedup.ngram_containment_full_sql(threshold=0.8))
 def containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric char-5-gram containment verify (Broder 1997) over the
@@ -4852,7 +4694,16 @@ def containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the short side. ``containment_recall_audit`` carries the measured
     candidate recall against brute-force containment ground truth."""
     docs = load(spark, sf_dir, "documents")
-    cands = _materialized_containment_candidates(spark, sf_dir, docs)
+    # the union generator is what lets the verify reach its target pair
+    # class: short-in-long pairs have J≈0.05 and band-collide with
+    # P≈4J⁴≈2.5e-5, so only the asymmetric probe side surfaces them
+    cands = staged(
+        spark,
+        sf_dir,
+        "containment_cands",
+        dedup.ngram_containment_full_sql(threshold=0.8),
+        lambda: dedup.containment_union_candidates(docs),
+    )
     return dedup.ngram_containment(docs, cands, threshold=0.8)
 
 
@@ -4908,7 +4759,7 @@ def partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     its hottest filter column."""
     cols = ["event_id", "ts", "user_id", "value", "event_type"]
     part = ["event_type"]
-    part_path = _stage_once(
+    e = staged(
         spark,
         sf_dir,
         "events_by_type",
@@ -4916,7 +4767,6 @@ def partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: load(spark, sf_dir, "events").select(*cols),
         partition_by=part,
     )
-    e = spark.read.parquet(part_path)
     return (
         e.filter(F.col("event_type") == "purchase")
         .groupBy("event_type")
@@ -4948,7 +4798,7 @@ def _materialized_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     like every other inter-stage product of the dedup DAG (pairs →
     clusters → survivors)."""
     docs = load(spark, sf_dir, "documents")
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "dedup_clusters",
@@ -5115,7 +4965,7 @@ def _materialized_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF float index (id, embedding, cell) staged once,
     PARTITIONED BY cell — probes prune at planning time and never
     re-assign a vector."""
-    path = _stage_once(
+    return staged(
         spark,
         sf_dir,
         "ivf_index",
@@ -5126,14 +4976,13 @@ def _materialized_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         partition_by=["cell"],
     )
-    return spark.read.parquet(path)
 
 
 def _materialized_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ code table staged once — the production shape: the index is
     built at ingest and every query (serving top-k, rerank, recall
     audit) reads it, never re-encodes the corpus."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "pq_codes",
@@ -5146,7 +4995,7 @@ def _materialized_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF-PQ index staged once, PARTITIONED BY cell —
     probes become planning-time partition pruning over the index files
     and never re-encode a vector."""
-    path = _stage_once(
+    return staged(
         spark,
         sf_dir,
         "ivf_pq_index",
@@ -5154,13 +5003,12 @@ def _materialized_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: similarity.ivf_pq_index(load(spark, sf_dir, "embeddings")),
         partition_by=["cell"],
     )
-    return spark.read.parquet(path)
 
 
 def _materialized_rpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual-PQ code table staged once (version key: the rpq twin
     SQL, which embeds every stage-codebook constant)."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "rpq_codes",
@@ -5256,7 +5104,7 @@ def ann_rpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _materialized_rpq3_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-stage residual-PQ code table staged once (version key embeds
     all three stage codebooks via the twin SQL)."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "rpq3_codes",
@@ -5287,7 +5135,7 @@ def ann_rpq3_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _materialized_binary_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-bit code table staged once — 8 bytes/vector, read by the
     binary serving and recall queries."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "binary_codes",
@@ -5316,7 +5164,7 @@ def _materialized_ann_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force ground truth for the recall probes, staged ONCE —
     8 recall tiers share identical exact top-k sides (32 brute corpus
     scans collapse to 4 plus a parquet read)."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "ann_ground_truth",
@@ -5455,7 +5303,7 @@ def _materialized_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic pair graph staged once to parquet — the pairs query and
     the survivors prune share one materialization (the same
     pairs→clusters→survivors barrier the simhash pipeline uses)."""
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "semantic_pairs",
@@ -5933,7 +5781,7 @@ def _materialized_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         media = _synth_media_df(spark, sf_dir, "bmp9")
         return dedup.hamming_near_dups(multimodal.dhash_media(media), "dhash")
 
-    return _stage_once_df(spark, sf_dir, "dhash_pairs", _DH_ORACLE, build)
+    return staged(spark, sf_dir, "dhash_pairs", _DH_ORACLE, build)
 
 
 @_q("multimodal_near_dups", _DH_ORACLE)
@@ -6500,7 +6348,7 @@ def _video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     write-once/read-many contract as the staged dHash pairs."""
     from tinyetl_spark.operators import multimodal
 
-    return _stage_once_df(
+    return staged(
         spark,
         sf_dir,
         "video_frames",
@@ -6588,23 +6436,6 @@ _IQ_ORACLE = f"""
              AS is_flat
     FROM px ORDER BY doc_id
     """
-
-
-def _materialized_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-image quality stats staged once (write-once/read-many, the
-    same contract as the staged dHash pairs) — the curation pipeline
-    consumes the gate verdicts without re-decoding a single payload."""
-    from tinyetl_spark.operators import multimodal
-
-    return _stage_once_df(
-        spark,
-        sf_dir,
-        "image_quality",
-        _IQ_ORACLE,
-        lambda: multimodal.image_quality_stats(
-            _synth_media_df(spark, sf_dir, "bmp9")
-        ),
-    )
 
 
 @_q("multimodal_image_quality", _IQ_ORACLE)
@@ -6775,23 +6606,7 @@ def _materialized_afp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             multimodal.audio_fingerprint_media(media), "afp"
         )
 
-    return _stage_once_df(spark, sf_dir, "afp_pairs", _AF_ORACLE, build)
-
-
-def _materialized_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-clip audio quality verdicts staged once (write-once/
-    read-many) — the audio half of the curation pipeline's gate."""
-    from tinyetl_spark.operators import multimodal
-
-    return _stage_once_df(
-        spark,
-        sf_dir,
-        "audio_quality",
-        _AQ_ORACLE,
-        lambda: multimodal.audio_quality_stats(
-            _synth_media_df(spark, sf_dir, "wav260")
-        ),
-    )
+    return staged(spark, sf_dir, "afp_pairs", _AF_ORACLE, build)
 
 
 _MM_PIPE_ORACLE = f"""
@@ -6861,8 +6676,20 @@ def multimodal_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_base = docs_all.filter(
         (F.octet_length("text") == F.length("text")) & (F.length("text") > 0)
     )
-    iq = _materialized_image_quality(spark, sf_dir)
-    aq = _materialized_audio_quality(spark, sf_dir)
+    iq = staged(
+        spark,
+        sf_dir,
+        "image_quality",
+        _IQ_ORACLE,
+        lambda: multimodal.image_quality_stats(_synth_media_df(spark, sf_dir, "bmp9")),
+    )
+    aq = staged(
+        spark,
+        sf_dir,
+        "audio_quality",
+        _AQ_ORACLE,
+        lambda: multimodal.audio_quality_stats(_synth_media_df(spark, sf_dir, "wav260")),
+    )
     # keep = not flat, clip fraction under 10% (a single clipped
     # sample shouldn't kill a clip — the FRACTION is the real gate;
     # clip_frac is floor_round-ed 6dp on both engines so the boundary
@@ -7284,45 +7111,6 @@ def multimodal_decimate_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parquet.rs:529-582)
 # =====================================================================
 
-def _roundtrip_dir(sf_dir: str, name: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    # pid in the key: the embedded-Derby roundtrip holds a JVM-wide
-    # boot lock on its database directory, so two concurrent processes
-    # (driver correctness gate + a local pytest/bench run) sharing an
-    # sf_dir-only key would collide with XSDB6. Within one process the
-    # dir is stable, keeping re-runs idempotent via truncate semantics.
-    tag = hashlib.md5(f"{sf_dir}|{os.getpid()}".encode()).hexdigest()[:8]
-    root = f"{tempfile.gettempdir()}/tinyetl_rt_{tag}"
-    _register_rt_cleanup(root)
-    return f"{root}/{name}"
-
-
-_RT_CLEANUP_ROOTS: set[str] = set()
-
-
-def _register_rt_cleanup(root: str) -> None:
-    """Remove this process's pid-keyed roundtrip/checkpoint dirs at
-    exit so abandoned sink + streaming state doesn't accumulate in
-    /tmp across runs (round-7 ADVICE). atexit, not eager delete:
-    within the process the dirs must persist so bench best-of-2 reps
-    and repeated pytest cases stay idempotent."""
-    import atexit
-    import shutil
-
-    if root in _RT_CLEANUP_ROOTS:
-        return
-    if not _RT_CLEANUP_ROOTS:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(r, ignore_errors=True) for r in _RT_CLEANUP_ROOTS
-            ]
-        )
-    _RT_CLEANUP_ROOTS.add(root)
-
-
 @_q(
     "csv_roundtrip",
     """
@@ -7339,7 +7127,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tinyetl_spark.engine import transfer
 
-    out = _roundtrip_dir(sf_dir, "orders.csv")
+    out = roundtrip_dir(sf_dir, "orders.csv")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     transfer(spark, f"{sf_dir}/orders.parquet", out, truncate=True)
     from tinyetl_spark.io.files import read_csv
@@ -7371,7 +7159,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tinyetl_spark.engine import transfer
 
-    out = _roundtrip_dir(sf_dir, "orders.orc")
+    out = roundtrip_dir(sf_dir, "orders.orc")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     transfer(spark, f"{sf_dir}/orders.parquet", out, truncate=True)
     from tinyetl_spark.io.files import read_orc
@@ -7404,11 +7192,11 @@ def csv_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage the nanos->µs-normalized table (the raw file's TIMESTAMP
     # (NANOS) column reads as bigint; load() owns that conversion)
-    staged = _roundtrip_dir(sf_dir, "events_us.parquet")
+    staged = roundtrip_dir(sf_dir, "events_us.parquet")
     os.makedirs(os.path.dirname(staged), exist_ok=True)
     if not os.path.exists(staged):
         load(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
-    out = _roundtrip_dir(sf_dir, "events.csv")
+    out = roundtrip_dir(sf_dir, "events.csv")
     transfer(spark, staged, out, truncate=True)
     from tinyetl_spark.io.files import read_csv
 
@@ -7443,14 +7231,16 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark.engine import transfer
     from tinyetl_spark.io.files import read_avro
 
-    sub_path = _stage_once(
+    version = ORACLES["avro_roundtrip"]  # same filter constant as the twin
+    staged(
         spark,
         sf_dir,
         "orders_sub20",
-        ORACLES["avro_roundtrip"],  # same filter constant as the twin
+        version,
         lambda: load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 20 == 0),
     )
-    out = _roundtrip_dir(sf_dir, "orders.avro")
+    sub_path = staged_path(sf_dir, "orders_sub20", version)
+    out = roundtrip_dir(sf_dir, "orders.avro")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     transfer(spark, sub_path, out, truncate=True)
     back = read_avro(spark, out)
@@ -7472,7 +7262,7 @@ def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tinyetl_spark.engine import transfer
 
-    out = _roundtrip_dir(sf_dir, "nation.json")
+    out = roundtrip_dir(sf_dir, "nation.json")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     transfer(spark, f"{sf_dir}/nation.parquet", out, truncate=True)
     from tinyetl_spark.io.files import read_json
@@ -7492,7 +7282,7 @@ def sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark.engine import transfer
     from tinyetl_spark.io import sqlite as sio
 
-    out = _roundtrip_dir(sf_dir, "rt.db")
+    out = roundtrip_dir(sf_dir, "rt.db")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     transfer(spark, f"{sf_dir}/customer.parquet", f"{out}#customer", truncate=True)
     back = sio.read_table(spark, out, "customer")
@@ -7539,7 +7329,7 @@ def duckdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark.engine import transfer
     from tinyetl_spark.io import duckdb_io
 
-    out = _roundtrip_dir(sf_dir, "rt.duckdb")
+    out = roundtrip_dir(sf_dir, "rt.duckdb")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     transfer(spark, f"{sf_dir}/supplier.parquet", f"{out}#supplier", truncate=True)
     back = duckdb_io.read_table(spark, out, "supplier")
@@ -7562,7 +7352,7 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark.engine import transfer
     from tinyetl_spark.io import jdbc as jio
 
-    out = _roundtrip_dir(sf_dir, "rt_derby")
+    out = roundtrip_dir(sf_dir, "rt_derby")
     transfer(spark, f"{sf_dir}/supplier.parquet", f"derby://{out}#supplier",
              truncate=True)
     tgt = jio.build_jdbc("derby", f"derby://{out}", "supplier")
@@ -7590,7 +7380,7 @@ def cli_job_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark import cli
     from tinyetl_spark.io.files import read_csv
 
-    out_dir = _roundtrip_dir(sf_dir, "cli_job")
+    out_dir = roundtrip_dir(sf_dir, "cli_job")
     os.makedirs(out_dir, exist_ok=True)
     out_csv = f"{out_dir}/nation_t.csv"
     job = f"{out_dir}/job.yaml"
@@ -7637,7 +7427,7 @@ def streaming_foreachbatch_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tinyetl_spark.io import jdbc as jio
 
-    db = _roundtrip_dir(sf_dir, "stream_derby")
+    db = roundtrip_dir(sf_dir, "stream_derby")
     ckpt = f"{db}.checkpoint"
     # a fresh DB per run keeps the append + replay semantics inspectable.
     # Derby keeps a booted in-JVM instance per DB path: shut it down
@@ -7698,7 +7488,7 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyetl_spark.operators import maintenance
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    root = _roundtrip_dir(sf_dir, "snap_upsert")
+    root = roundtrip_dir(sf_dir, "snap_upsert")
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root, exist_ok=True)
     docs.write.mode("overwrite").parquet(f"{root}/snap_v0")
@@ -7742,7 +7532,7 @@ def _stage_table_symlink(sf_dir: str, table: str) -> str:
     can race the check, so creation must tolerate losing."""
     import os
 
-    stage = _roundtrip_dir(sf_dir, f"{table}_stream")
+    stage = roundtrip_dir(sf_dir, f"{table}_stream")
     os.makedirs(stage, exist_ok=True)
     link = f"{stage}/{table}.parquet"
     if not os.path.lexists(link):
@@ -7760,7 +7550,7 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the stream."""
     from tinyetl_spark import streaming
 
-    _ensure_nanos_conf(spark)
+    _ensure_runtime_confs(spark)
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stage = _stage_table_symlink(sf_dir, "events")
     stream = streaming.read_events_stream(spark, stage, raw_schema)
@@ -7984,7 +7774,7 @@ def streaming_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same checkpoint processes zero new files and the
     result is unchanged). Aggregation happens on the batch read-back
     of the sink directory."""
-    sink = _roundtrip_dir(sf_dir, "stream_sink_v1")
+    sink = roundtrip_dir(sf_dir, "stream_sink_v1")
     ckpt = f"{sink}.checkpoint"
     s = _staged_events_stream(spark, sf_dir).select("event_type", "value")
     q = (
@@ -8035,7 +7825,7 @@ def streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.select("vec_id", "embedding"), "embedding",
         similarity._ivf_seeded_centroids(), out_col="cell",
     )
-    sink = _roundtrip_dir(sf_dir, "ivf_stream_index_v1")
+    sink = roundtrip_dir(sf_dir, "ivf_stream_index_v1")
     ckpt = f"{sink}.checkpoint"
     q = (
         assigned.writeStream.format("parquet")
@@ -8076,7 +7866,7 @@ def streaming_rollup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight from raw events — the lambda-architecture equivalence,
     measured instead of assumed."""
     stream = _staged_events_stream(spark, sf_dir)
-    sink = _roundtrip_dir(sf_dir, "minute_bars_v1")
+    sink = roundtrip_dir(sf_dir, "minute_bars_v1")
     ckpt = f"{sink}.checkpoint"
 
     def upsert(batch_df, bid):
@@ -8153,7 +7943,7 @@ def streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage)
         .select("user_id")
     )
-    sink = _roundtrip_dir(sf_dir, "cm_stream_sketch_v1")
+    sink = roundtrip_dir(sf_dir, "cm_stream_sketch_v1")
     ckpt = f"{sink}.checkpoint"
 
     def merge(batch_df, bid):
@@ -8387,7 +8177,7 @@ def streaming_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tinyetl_spark import streaming
 
-    staged = _roundtrip_dir(sf_dir, "events_uid_delta2")
+    staged = roundtrip_dir(sf_dir, "events_uid_delta2")
     if not os.path.exists(staged):
         os.makedirs(os.path.dirname(staged), exist_ok=True)
         ev = load(spark, sf_dir, "events").select(
@@ -8423,7 +8213,7 @@ def ann_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe matches the ann_lsh_topk oracle exactly."""
     import os
 
-    idx = _roundtrip_dir(sf_dir, "ann_index")
+    idx = roundtrip_dir(sf_dir, "ann_index")
     emb = load(spark, sf_dir, "embeddings")
     if not os.path.exists(idx):
         similarity.build_ann_index(emb.filter(F.col("vec_id") != 0), idx)
