@@ -499,6 +499,16 @@ def test_session_turns_off_call_site_capture(spark, monkeypatch):
     assert perr.is_debugging_enabled() is False
 
 
+def test_session_driver_heap_fits_the_host(spark):
+    import os
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    conf = spark.conf.get("spark.driver.memory")
+    assert conf.endswith("m") and int(conf[:-1]) * 1024 * 1024 <= phys // 2
+    # the heap the JVM actually got (rounded up to the heap's alignment)
+    assert spark._jvm.java.lang.Runtime.getRuntime().maxMemory() < phys
+
+
 # ----------------------------------------------------------- CLI/YAML
 
 def test_cli_yaml_job_end_to_end(spark, tmp_path, monkeypatch):

@@ -935,6 +935,25 @@ def test_kmv_overlap_underfull_returns_exact_counts(spark):
     assert abs(row["jaccard_est"] - 10 / 50) < 1e-9
 
 
+def _viterbi_ref(w, costs):
+    """Plain-Python min-cost segmentation: dp[i] = best (cost, toks) of
+    the i-char prefix over last pieces of 1..UNI_MAXPIECE chars, ties
+    broken by the longer last piece; a missing piece costs UNI_UNK per
+    char."""
+    from tinyetl_spark.operators.tokenizer import UNI_MAXPIECE, UNI_UNK
+
+    dp = [(0, [])]
+    for i in range(1, len(w) + 1):
+        cands = []
+        for ln in range(1, min(UNI_MAXPIECE, i) + 1):
+            piece = w[i - ln : i]
+            c = costs.get(piece, UNI_UNK * ln)
+            cands.append((dp[i - ln][0] + c, -ln, dp[i - ln][1] + [piece]))
+        best = min(cands)
+        dp.append((best[0], best[2]))
+    return dp[-1][1]
+
+
 def test_unigram_train_encode_matches_python_reference(spark):
     """Property check: distributed unigram-LM hard-EM training AND the
     Viterbi encode equal an independent single-machine reference —
@@ -948,7 +967,6 @@ def test_unigram_train_encode_matches_python_reference(spark):
     from tinyetl_spark.operators.tokenizer import (
         UNI_MAXLEN,
         UNI_MAXPIECE,
-        UNI_UNK,
         UNI_VOCAB,
         unigram_train,
         unigram_train_encode,
@@ -979,23 +997,11 @@ def test_unigram_train_encode_matches_python_reference(spark):
         tot = sum(vocab.values())
         costs = {p: micro(1e6 * math.log10(tot / f)) for p, f in vocab.items()}
 
-        def viterbi(w):
-            dp = [(0, [])]
-            for i in range(1, len(w) + 1):
-                cands = []
-                for ln in range(1, min(UNI_MAXPIECE, i) + 1):
-                    piece = w[i - ln : i]
-                    c = costs.get(piece, UNI_UNK * ln)
-                    cands.append((dp[i - ln][0] + c, -ln, dp[i - ln][1] + [piece]))
-                best = min(cands)
-                dp.append((best[0], best[2]))
-            return dp[-1][1]
-
         usage = collections.Counter()
         for _ in range(n_iters):
             usage = collections.Counter()
             for w, c in wf.items():
-                for p in viterbi(w):
+                for p in _viterbi_ref(w, costs):
                     usage[p] += c
             total = sum(usage.values())
             costs = {
@@ -1006,7 +1012,7 @@ def test_unigram_train_encode_matches_python_reference(spark):
             ((p, usage.get(p, 0), costs[p]) for p in vocab),
             key=lambda r: (-r[1], r[0]),
         )
-        return rows, viterbi
+        return rows, lambda w: _viterbi_ref(w, costs)
 
     @settings(max_examples=3, deadline=None)
     @given(st.lists(st.lists(word, min_size=1, max_size=5), min_size=1, max_size=6))
@@ -1049,7 +1055,6 @@ def test_unigram_two_best_matches_bruteforce_enumeration(spark):
     from tinyetl_spark.operators.tokenizer import (
         UNI_MAXPIECE,
         UNI_UNK,
-        _cost_map_lit,
         _viterbi_two_costs,
     )
 
@@ -1073,7 +1078,7 @@ def test_unigram_two_best_matches_bruteforce_enumeration(spark):
     df = spark.createDataFrame([(w,) for w in words], "word string")
     got = df.select(
         "word", *(c.alias(n) for c, n in zip(
-            _viterbi_two_costs(F.col("word"), _cost_map_lit(costs)), ("c1", "c2")
+            _viterbi_two_costs(F.col("word"), costs), ("c1", "c2")
         ))
     ).collect()
     for r in got:
@@ -1139,22 +1144,10 @@ def test_unigram_prune_matches_python_reference(spark):
                 dp[i] = min(cands)
             return dp[-1]
 
-        def vit_toks(w):
-            dp = [(0, [])]
-            for i in range(1, len(w) + 1):
-                cands = []
-                for ln in range(1, min(UNI_MAXPIECE, i) + 1):
-                    piece = w[i - ln : i]
-                    c = costs.get(piece, UNI_UNK * ln)
-                    cands.append((dp[i - ln][0] + c, -ln, dp[i - ln][1] + [piece]))
-                best = min(cands)
-                dp.append((best[0], best[2]))
-            return dp[-1][1]
-
         def em_iter():
             usage = collections.Counter()
             for w, c in wf.items():
-                for p in vit_toks(w):
+                for p in _viterbi_ref(w, costs):
                     usage[p] += c
             total = sum(usage.values())
             nv = len(costs)
@@ -4097,84 +4090,66 @@ def test_curation_gate_before_dedup_ordering(spark):
     assert survivors == {2, 4, 7}
 
 
-def test_expr_built_viterbi_matches_hof_build(spark):
-    """r12 construction fix: the unigram Viterbi DP fold (and its cost
-    map) build as ONE parsed SQL expression when given the costs dict.
-    Pin (a) bit-exact token-array equality against the HOF-lambda
-    build over the real dictionary, (b) the parse path actually parses
-    (no silent fallback), (c) string-literal escaping for pieces
-    containing quotes/backslashes."""
-    from tests.conftest import SF_DIR
-    from tinyetl_spark.operators.similarity import _parsed_expr
+def test_expr_built_viterbi_matches_python_dp(spark):
+    """The unigram Viterbi folds, each ONE parsed SQL expression, agree
+    with the plain-Python DP: token arrays bit-exact and the 2-best
+    fold's c1 equal to the best path's cost, over a trained dictionary
+    (an in-test corpus), plus string-literal escaping for pieces
+    containing quotes/backslashes and a cost tie."""
+    import random
+
     from tinyetl_spark.operators.tokenizer import (
-        _cost_map_lit,
-        _cost_map_sql,
+        UNI_UNK,
         _uni_train_state,
         _viterbi_toks,
-        _viterbi_toks_sql,
-    )
-
-    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    costs, _, wf = _uni_train_state(df, "text", 2)
-    # (b) the rendered expression parses — no silent HOF fallback
-    _parsed_expr(_viterbi_toks_sql("`word`", _cost_map_sql(costs), 4))
-
-    def toks(cm):
-        return sorted(
-            (r["word"], tuple(r["t"]))
-            for r in wf.select(
-                "word", _viterbi_toks(F.col("word"), cm).alias("t")
-            ).collect()
-        )
-
-    assert toks(costs) == toks(_cost_map_lit(costs))
-
-    # the 2-best DP (unigram_ambiguity) gets the same treatment
-    from tinyetl_spark.operators.tokenizer import (
         _viterbi_two_costs,
-        _viterbi_two_costs_sql,
     )
 
-    _parsed_expr(_viterbi_two_costs_sql("`word`", _cost_map_sql(costs), 4))
+    rng = random.Random(12)
+    docs = [
+        (i, " ".join(
+            "".join(rng.choice("abcdeab") for _ in range(rng.randint(1, 12)))
+            for _ in range(8)
+        ))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    costs, _, wf = _uni_train_state(df, "text", 2)
+    c1, _ = _viterbi_two_costs(F.col("word"), costs)
+    got = wf.select(
+        "word", _viterbi_toks(F.col("word"), costs).alias("t"), c1.alias("c1")
+    ).collect()
+    assert len(got) > 100
+    for r in got:
+        want = _viterbi_ref(r["word"], costs)
+        assert list(r["t"]) == want, r["word"]
+        assert r["c1"] == sum(costs.get(p, UNI_UNK * len(p)) for p in want)
 
-    def twocosts(cm):
-        a, b = _viterbi_two_costs(F.col("word"), cm)
-        return sorted(
-            tuple(r)
-            for r in wf.select(
-                "word", a.alias("a"), b.alias("b")
-            ).collect()
-        )
-
-    assert twocosts(costs) == twocosts(_cost_map_lit(costs))
-
-    nasty = {"a": 10, "'": 5, "\\": 7, "a'b": 4, "ab": 25, "b": 11}
-    w = spark.createDataFrame(
-        [("a'b",), ("a\\b",), ("ab",), ("'\\",)], "word string"
-    )
-
-    def ntoks(cm):
-        return [
-            tuple(r["t"])
-            for r in w.select(
-                _viterbi_toks(F.col("word"), cm).alias("t")
-            ).collect()
-        ]
-
-    assert ntoks(nasty) == ntoks(_cost_map_lit(nasty))
+    # "ab" ties "a" + "b": the longer last piece wins
+    nasty = {"a": 10, "'": 5, "\\": 7, "a'b": 4, "ab": 21, "b": 11}
+    words = ["a'b", "a\\b", "ab", "'\\"]
+    w = spark.createDataFrame([(x,) for x in words], "word string")
+    got = w.select(
+        "word", _viterbi_toks(F.col("word"), nasty).alias("t")
+    ).collect()
+    assert {r["word"]: list(r["t"]) for r in got} == {
+        x: _viterbi_ref(x, nasty) for x in words
+    }
 
 
 def test_expr_built_vector_folds_match_hof_build(spark):
-    # r12 construction fix: dot/norm/cosine build as ONE parsed SQL
+    # r12 construction fix: _vec/norm/cosine build as ONE parsed SQL
     # expression instead of per-operator HOF lambdas. Pin (a) bit-exact
-    # value equality against the lambda build, (b) the fallback path on
-    # a Column whose .sql() rendering does not re-parse (F.when chains
-    # render prefix "=(a, b)" comparisons).
+    # value equality against a lambda build, (b) an input whose .sql()
+    # rendering does not re-parse (F.when chains render prefix
+    # "=(a, b)" comparisons) fails at the caller's select.
+    import pytest
+    from pyspark.errors import ParseException
+
     from tinyetl_spark.operators.similarity import (
         _lit_array,
         _vec,
         cosine_col,
-        dot_col,
         norm_col,
     )
 
@@ -4184,12 +4159,11 @@ def test_expr_built_vector_folds_match_hof_build(spark):
             (7, [0.5, 0.25, -1.0, 2.0]),
             (9, [-3.0, 0.0, 1e-7, 9.9]),
         ],
-        "query_id long, embedding array<double>",
+        "query_id long, embedding array<float>",
     )
 
     def hof_vec(col):
-        c = F.col(col) if isinstance(col, str) else col
-        return F.transform(c, lambda x: x.cast("double"))
+        return F.transform(F.col(col), lambda x: x.cast("double"))
 
     def hof_dot(a, b):
         return F.aggregate(
@@ -4208,22 +4182,13 @@ def test_expr_built_vector_folds_match_hof_build(spark):
         )
 
     q = _lit_array([1.5, -2.0, 0.75, 3.25])
-    # F.when chain: exercises the non-round-trippable fallback
-    qcase = F.when(F.col("query_id") == 0, _lit_array([1.0, 0.0, 0.0, 0.0])).when(
-        F.col("query_id") == 7, _lit_array([0.0, 1.0, 0.0, 0.0])
-    )
     pairs = [
-        (dot_col(_vec("embedding"), q), hof_dot(hof_vec("embedding"), q)),
+        (_vec("embedding"), hof_vec("embedding")),
         (norm_col(_vec("embedding")), hof_norm(hof_vec("embedding"))),
         (
             cosine_col(_vec("embedding"), q),
             hof_dot(hof_vec("embedding"), q)
             / (hof_norm(hof_vec("embedding")) * hof_norm(q)),
-        ),
-        (
-            cosine_col(_vec("embedding"), qcase),
-            hof_dot(hof_vec("embedding"), qcase)
-            / (hof_norm(hof_vec("embedding")) * hof_norm(qcase)),
         ),
     ]
     sel = df.select(
@@ -4231,9 +4196,13 @@ def test_expr_built_vector_folds_match_hof_build(spark):
         *[c.alias(f"o{i}") for i, (_, c) in enumerate(pairs)],
     ).collect()
     for row in sel:
-        for i in range(len(pairs)):
-            n, o = row[f"n{i}"], row[f"o{i}"]
-            if n is None or o is None:
-                assert n is None and o is None
-            else:
-                assert n.hex() == o.hex()
+        assert [x.hex() for x in row["n0"]] == [x.hex() for x in row["o0"]]
+        for i in range(1, len(pairs)):
+            assert row[f"n{i}"].hex() == row[f"o{i}"].hex()
+
+    qcase = F.when(F.col("query_id") == 0, _lit_array([1.0, 0.0, 0.0, 0.0])).when(
+        F.col("query_id") == 7, _lit_array([0.0, 1.0, 0.0, 0.0])
+    )
+    built = cosine_col(_vec("embedding"), qcase)
+    with pytest.raises(ParseException):
+        df.select(built.alias("c"))

@@ -15,8 +15,17 @@ from tinyetl_spark.queries import ORACLES, QUERIES
 
 # Exhaustive tier (see pytest.ini): the full-registry DuckDB value
 # replay is the bulk of the suite's wall time and exceeds the driver's
-# verify budget — opt in with `-m full`.
-pytestmark = pytest.mark.full
+# verify budget — opt in with `-m full`. A smoke set stays in the
+# default tier so it checks values: one query per parsed-fold builder
+# (norm_col, cosine_col against a column and against a literal array,
+# the Viterbi token fold, the 2-best Viterbi fold).
+SMOKE = {
+    "embedding_norms",
+    "ann_brute_topk",
+    "ann_binary_rerank_topk",
+    "unigram_encode_docs",
+    "unigram_ambiguity",
+}
 
 
 def _normalize_cell(v):
@@ -45,7 +54,10 @@ def _normalize(df_pandas):
     return cols, rows
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize(
+    "name",
+    [n if n in SMOKE else pytest.param(n, marks=pytest.mark.full) for n in sorted(QUERIES)],
+)
 def test_query_matches_oracle(spark, duck, name):
     sdf = QUERIES[name](spark, SF_DIR)
     got = sdf.toPandas()

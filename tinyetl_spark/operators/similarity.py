@@ -3,7 +3,8 @@
 Scale design:
 
 * **Dot products / norms** stay JVM-side via higher-order functions
-  (``zip_with`` + ``aggregate``) — vectorized in codegen, no Python.
+  (``zip_with`` + ``aggregate``), each fold built as one parsed SQL
+  expression — vectorized in codegen, no Python.
 * **Brute-force top-k** against one query vector is a map + ``orderBy
   LIMIT k``: Spark executes it as a per-partition top-k (TakeOrdered) —
   no full sort, no full shuffle; this is the exact baseline.
@@ -55,36 +56,23 @@ def _expr_sql(c: Column | str) -> str:
     """Render a Column back to ONE re-parseable SQL string (a single
     py4j call) so composite folds can be built as one ``F.expr`` parse
     instead of one JVM round-trip per operator. Construction-side only:
-    the parsed tree is the same expression (verified by analyzed-plan
-    comparison in tests), so plans and values are unchanged — the same
-    treatment the minhash signature folds got in r12 (~7x less build
-    time for identical ArrayAggregate plans)."""
+    the parsed tree is the same expression, so plans and values are
+    unchanged — the same treatment the minhash signature folds got in
+    r12 (~7x less build time for identical ArrayAggregate plans).
+
+    Contract: every input must render back to SQL that re-parses —
+    column names, ``F.expr`` columns (rendered verbatim), transforms,
+    slices, literal arrays. One that does not (an ``F.when`` chain
+    renders ``CASE WHEN =(a, b) ...``) is not checked here: the fold
+    built on it raises ``ParseException`` at the caller's ``select``,
+    which analyzes eagerly."""
     if isinstance(c, str):
         return f"`{c}`"
     return c._jc.node().sql()
 
 
-def _parsed_expr(sql_str: str) -> Column:
-    """``F.expr`` with EAGER parse validation: classic PySpark defers
-    the parse to first plan use, so a non-round-trippable rendering
-    (see ``_expr_sql``) would otherwise blow up far from its builder —
-    validating here lets the builders fall back to the HOF-lambda
-    construction instead."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        # raises ParseException on bad SQL; result discarded
-        spark._jsparkSession.sessionState().sqlParser().parseExpression(sql_str)
-    return F.expr(sql_str)
-
-
 def _vec(col: Column | str) -> Column:
-    try:
-        return _parsed_expr(f"transform({_expr_sql(col)}, x -> CAST(x AS DOUBLE))")
-    except Exception:  # noqa: BLE001 — non-round-trippable rendering
-        c = F.col(col) if isinstance(col, str) else col
-        return F.transform(c, lambda x: x.cast("double"))
+    return F.expr(f"transform({_expr_sql(col)}, x -> CAST(x AS DOUBLE))")
 
 
 def _dot_sql(a_sql: str, b_sql: str) -> str:
@@ -104,52 +92,21 @@ def _norm_sql(a_sql: str) -> str:
     )
 
 
-def _dot_hof(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _norm_hof(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v
-        )
-    )
-
-
-def dot_col(a: Column, b: Column) -> Column:
-    """Dot product via zip_with + aggregate (left-to-right fold).
-
-    Built as ONE parsed SQL expression when both inputs render back to
-    SQL (every internal call site: column refs, transforms, slices,
-    literal arrays) — the analyzed tree is the same expression as the
-    HOF-lambda build, modulo lambda-variable names, at a fraction of
-    the py4j round-trips. Falls back to the lambda build for Columns
-    whose ``.sql()`` rendering does not re-parse (e.g. ``F.when``
-    chains render ``=(a, b)`` prefix comparisons)."""
-    try:
-        return _parsed_expr(_dot_sql(_expr_sql(a), _expr_sql(b)))
-    except Exception:  # noqa: BLE001
-        return _dot_hof(a, b)
-
-
 def norm_col(a: Column) -> Column:
-    try:
-        return _parsed_expr(_norm_sql(_expr_sql(a)))
-    except Exception:  # noqa: BLE001
-        return _norm_hof(a)
+    """L2 norm as one parsed ``aggregate(transform(...))`` fold; ``a``
+    follows :func:`_expr_sql`'s contract."""
+    return F.expr(_norm_sql(_expr_sql(a)))
 
 
 def cosine_col(a: Column, b: Column) -> Column:
-    try:
-        a_sql, b_sql = _expr_sql(a), _expr_sql(b)
-        return _parsed_expr(
-            f"({_dot_sql(a_sql, b_sql)}) / "
-            f"(({_norm_sql(a_sql)}) * ({_norm_sql(b_sql)}))"
-        )
-    except Exception:  # noqa: BLE001
-        return _dot_hof(a, b) / (_norm_hof(a) * _norm_hof(b))
+    """Cosine as one parsed expression: a left-to-right ``zip_with`` +
+    ``aggregate`` dot over the product of the two norms. Both inputs
+    follow :func:`_expr_sql`'s contract."""
+    a_sql, b_sql = _expr_sql(a), _expr_sql(b)
+    return F.expr(
+        f"({_dot_sql(a_sql, b_sql)}) / "
+        f"(({_norm_sql(a_sql)}) * ({_norm_sql(b_sql)}))"
+    )
 
 
 def dot_sql(a: str, b: str) -> str:
@@ -1587,8 +1544,8 @@ def _probe_case_vec(qvs: dict[int, list[float]], probes, dim: int | None = None)
     """Per-row probe vector: a |probes|-way literal CASE keyed on the
     exploded query_id — same doubles as the per-branch literals, so a
     cosine against it is bit-identical (the ann_budget_curve rerank
-    contract). One parsed SQL CASE so cosine_col's expr-string fast
-    path stays usable."""
+    contract). One parsed SQL CASE, not an ``F.when`` chain: the chain
+    does not render back to SQL that re-parses (see :func:`_expr_sql`)."""
     return F.expr(
         "CASE "
         + " ".join(
@@ -2759,21 +2716,7 @@ def ann_budget_curve(
         "mrl16", 64,
     ))
 
-    # per-row probe vector: a |probes|-way literal CASE keyed on the
-    # exploded query_id — same doubles as the per-branch literals, so
-    # the rerank cosine is bit-identical. Built as ONE parsed SQL CASE
-    # (the same CaseWhen tree an F.when chain builds) because F.expr
-    # columns render back verbatim, keeping cosine_col's expr-string
-    # fast path usable for the rerank fold.
-    qexpr = F.expr(
-        "CASE "
-        + " ".join(
-            f"WHEN query_id = {q} THEN "
-            f"{_lit_sql([float(x) for x in qvs[q]])}"
-            for q in pbig
-        )
-        + " END"
-    )
+    qexpr = _probe_case_vec(qvs, pbig)
     cosine = F.round(cosine_col(_vec("embedding"), qexpr), 6)
 
     rer = df.join(F.broadcast(shorts), id_col).select(

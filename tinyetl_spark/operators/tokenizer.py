@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tinyetl_spark.operators.similarity import _expr_sql
 from tinyetl_spark.operators.text import words_col, words_sql
 
 BPE_END = "</w>"   # end-of-word marker symbol (classic BPE)
@@ -539,10 +540,9 @@ def _sql_str_lit(s: str) -> str:
 
 
 def _cost_map_sql(costs: dict[str, int]) -> str:
-    """The integer cost table rendered as ONE SQL map literal — the
-    parsed twin of :func:`_cost_map_lit` (same sorted key order, same
-    string keys / BIGINT values), at one parse instead of 2x|vocab|
-    py4j literal calls."""
+    """The integer cost table rendered as ONE SQL map literal (sorted
+    string keys, BIGINT values), at one parse instead of 2x|vocab| py4j
+    literal calls."""
     parts = []
     for p in sorted(costs):
         parts.append(_sql_str_lit(p))
@@ -551,13 +551,9 @@ def _cost_map_sql(costs: dict[str, int]) -> str:
 
 
 def _viterbi_toks_sql(word_sql: str, cm_sql: str, maxpiece: int) -> str:
-    """:func:`_viterbi_toks` as ONE SQL expression string — the exact
-    HOF tree (same candidate struct fields, same fold shape, same
-    coalesce/cast types), rendered for a single parse. Same
-    construction-side-only treatment as the r12 vector/minhash folds:
-    the analyzed expression is identical modulo lambda-variable names
-    (pinned by test_expr_built_viterbi_matches_hof_build), so plans,
-    values and runtime are unchanged — only the py4j round-trips go."""
+    """:func:`_viterbi_toks`'s DP as ONE SQL expression string, one
+    parse instead of one py4j round-trip per operator (the same
+    construction-side treatment as the r12 vector/minhash folds)."""
     sub = f"substring({word_sql}, i - l + 1, l)"
     prev = "element_at(acc, i - l + 1)"
     cand = (
@@ -584,72 +580,17 @@ def _viterbi_toks_sql(word_sql: str, cm_sql: str, maxpiece: int) -> str:
     )
 
 
-def _viterbi_toks(word, cost_map, maxpiece: int = UNI_MAXPIECE):
+def _viterbi_toks(word, costs: dict[str, int], maxpiece: int = UNI_MAXPIECE):
     """Min-cost segmentation of ``word`` under integer piece costs —
     an in-row DP fold: dp[i] = best (cost, toks) for the i-char
     prefix; candidates at i are the last-piece lengths 1..maxpiece,
     ranked by (cost asc, piece length desc). Missing pieces cost
-    UNI_UNK per char. Returns the token array.
-
-    ``cost_map`` may be the costs DICT (preferred — the whole fold
-    builds as one parsed SQL expression) or an already-built map
-    Column (the original HOF-lambda build, kept as the fallback for
-    non-round-trippable inputs)."""
-    if isinstance(cost_map, dict):
-        from tinyetl_spark.operators.similarity import _expr_sql, _parsed_expr
-
-        try:
-            return _parsed_expr(
-                _viterbi_toks_sql(
-                    _expr_sql(word), _cost_map_sql(cost_map), maxpiece
-                )
-            )
-        except Exception:  # noqa: BLE001 — non-round-trippable rendering
-            cost_map = _cost_map_lit(cost_map)
-    n = F.length(word)
-    init = F.array(
-        F.struct(
-            F.lit(0).cast("long").alias("cost"),
-            F.expr("CAST(array() AS array<string>)").alias("toks"),
-        )
+    UNI_UNK per char. Returns the token array, built as one parsed SQL
+    expression; ``word`` follows :func:`similarity._expr_sql`'s
+    contract."""
+    return F.expr(
+        _viterbi_toks_sql(_expr_sql(word), _cost_map_sql(costs), maxpiece)
     )
-
-    def step(acc, i):
-        cands = F.transform(
-            F.sequence(F.lit(1), F.least(F.lit(maxpiece), i)),
-            lambda l: F.struct(
-                (
-                    F.element_at(acc, i - l + 1)["cost"]
-                    + F.coalesce(
-                        F.element_at(cost_map, word.substr(i - l + 1, l)),
-                        (F.lit(UNI_UNK).cast("long") * l).cast("long"),
-                    )
-                ).alias("cost"),
-                (-l).cast("int").alias("negl"),
-                F.concat(
-                    F.element_at(acc, i - l + 1)["toks"],
-                    F.array(word.substr(i - l + 1, l)),
-                ).alias("toks"),
-            ),
-        )
-        best = F.array_min(cands)
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(best["cost"].alias("cost"), best["toks"].alias("toks"))
-            ),
-        )
-
-    dp = F.aggregate(F.sequence(F.lit(1), n), init, step)
-    return F.element_at(dp, -1)["toks"]
-
-
-def _cost_map_lit(costs: dict[str, int]):
-    flat = []
-    for p in sorted(costs):
-        flat.append(F.lit(p))
-        flat.append(F.lit(int(costs[p])).cast("long"))
-    return F.create_map(*flat)
 
 
 def _uni_em_iter(
@@ -1275,10 +1216,8 @@ UNI_AMB_INF = 10**15  # "no second path yet" sentinel; > any finite
 
 def _viterbi_two_costs_sql(word_sql: str, cm_sql: str, maxpiece: int) -> str:
     """:func:`_viterbi_two_costs`'s DP as ONE SQL expression string
-    ending in the 2-cost struct array — the exact HOF tree (same
-    candidate flattening, same array_sort top-2 retention, same
-    coalesce/cast types), one parse instead of per-operator py4j
-    round-trips. The caller extracts .c1/.c2 off element_at(..., -1)."""
+    ending in the node's 2-cost struct, one parse instead of
+    per-operator py4j round-trips. The caller extracts .c1/.c2."""
     edge = (
         f"coalesce(element_at({cm_sql}, substring({word_sql}, i - l + 1, l)), "
         f"CAST(CAST({UNI_UNK} AS BIGINT) * l AS BIGINT))"
@@ -1303,63 +1242,16 @@ def _viterbi_two_costs_sql(word_sql: str, cm_sql: str, maxpiece: int) -> str:
     )
 
 
-def _viterbi_two_costs(word, cost_map, maxpiece: int = UNI_MAXPIECE):
+def _viterbi_two_costs(word, costs: dict[str, int], maxpiece: int = UNI_MAXPIECE):
     """(best, second-best) segmentation costs of ``word`` as an in-row
     fold: per node keep the two smallest path costs; candidates at
     node i are both retained costs of each predecessor plus the edge.
-    Returns (c1, c2) columns; c2 carries the UNI_AMB_INF sentinel only
-    for length-1 words (single path).
-
-    ``cost_map`` may be the costs DICT (the whole DP builds as one
-    parsed SQL expression — same contract as :func:`_viterbi_toks`) or
-    a map Column (the HOF-lambda build, kept as the fallback)."""
-    if isinstance(cost_map, dict):
-        from tinyetl_spark.operators.similarity import _expr_sql, _parsed_expr
-
-        try:
-            last = _parsed_expr(
-                _viterbi_two_costs_sql(
-                    _expr_sql(word), _cost_map_sql(cost_map), maxpiece
-                )
-            )
-            return last["c1"], last["c2"]
-        except Exception:  # noqa: BLE001 — non-round-trippable rendering
-            cost_map = _cost_map_lit(cost_map)
-    n = F.length(word)
-    inf = F.lit(UNI_AMB_INF).cast("long")
-    init = F.array(
-        F.struct(F.lit(0).cast("long").alias("c1"), inf.alias("c2"))
+    Returns (c1, c2) columns off one parsed SQL expression; c2 carries
+    the UNI_AMB_INF sentinel only for length-1 words (single path).
+    ``word`` follows :func:`similarity._expr_sql`'s contract."""
+    last = F.expr(
+        _viterbi_two_costs_sql(_expr_sql(word), _cost_map_sql(costs), maxpiece)
     )
-
-    def step(acc, i):
-        def edge(l):
-            return F.coalesce(
-                F.element_at(cost_map, word.substr(i - l + 1, l)),
-                (F.lit(UNI_UNK).cast("long") * l).cast("long"),
-            )
-
-        cands = F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.least(F.lit(maxpiece), i)),
-                lambda l: F.array(
-                    F.element_at(acc, i - l + 1)["c1"] + edge(l),
-                    F.element_at(acc, i - l + 1)["c2"] + edge(l),
-                ),
-            )
-        )
-        s = F.array_sort(cands)
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(
-                    F.element_at(s, 1).alias("c1"),
-                    F.element_at(s, 2).alias("c2"),
-                )
-            ),
-        )
-
-    dp = F.aggregate(F.sequence(F.lit(1), n), init, step)
-    last = F.element_at(dp, -1)
     return last["c1"], last["c2"]
 
 

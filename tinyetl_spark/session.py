@@ -72,6 +72,14 @@ _DEFAULTS = {
 }
 
 
+def _local_driver_memory() -> str:
+    """Half the host's physical memory, in MB. A fixed heap larger than
+    the host (48g on a 15 GB machine) lets the heap grow without ever
+    collecting, and a second JVM beside it gets the process OOM-killed."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys // 2 // (1024 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "tinyetl_spark",
     master: str | None = None,
@@ -98,7 +106,7 @@ def get_spark(
         # NOTE: only takes effect when this call actually launches the
         # JVM; getOrCreate against a live session silently ignores it.
         # On a real cluster pass --driver-memory at submit time instead.
-        conf.setdefault("spark.driver.memory", "48g")
+        conf.setdefault("spark.driver.memory", _local_driver_memory())
         # Dozens of distinct queries in one JVM generate enough codegen
         # classes to fill HotSpot's default 240 MB code cache — once
         # full, JIT stops compiling and expression-heavy queries run
