@@ -101,9 +101,10 @@ def _sentinel(spark) -> float | None:
     return round(best, 4)
 
 
-def memo_record(events: list[tuple[str, str, float]]) -> dict:
+def memo_record(events: list[tuple[str, str, float]], jobs: int) -> dict:
     """One rep's artifact-store accesses: the names it built, the names
-    it hit, and the seconds it spent building each built name."""
+    it hit, and the seconds it spent building each built name, beside
+    the Spark jobs the rep ran (construction and execution)."""
     build_s: dict[str, float] = {}
     for kind, name, seconds in events:
         if kind == "build":
@@ -112,6 +113,7 @@ def memo_record(events: list[tuple[str, str, float]]) -> dict:
         "built": sorted(build_s),
         "hit": sorted({name for kind, name, _ in events if kind == "hit"}),
         "build_s": build_s,
+        "jobs": jobs,
     }
 
 
@@ -152,9 +154,13 @@ def _run_shard(names: list[str]) -> dict:
     # The artifact store logs every access to a shared artifact. Its
     # log is drained around each rep, so `memo[name][i]` says whether
     # rep i BUILT a shared artifact (cold: the wall a fresh production
-    # run pays) or reused one built earlier in the shard (warm). `best`
+    # run pays) or reused one built earlier in the shard (warm), and
+    # how many Spark jobs the rep ran (its own job group, counted by
+    # the status tracker, so eager construction jobs count too). `best`
     # stays min-over-reps (the steady-state number).
     from tinyetl_spark.artifacts import drain_events
+
+    sc = spark.sparkContext
     # best-of-2, plus an ADAPTIVE third rep when the first two disagree
     # by >25%: back-to-back same-code runs on this host drift ±25% on a
     # minutes scale (shared-VM noise — the r7 driver ran a near-uniform
@@ -178,12 +184,16 @@ def _run_shard(names: list[str]) -> dict:
                 # candidate-table materialization) — starting the clock
                 # after fn() would hide it
                 drain_events()
+                group = f"bench:{name}:{_rep}"
+                sc.setJobGroup(group, group)
                 t0 = time.perf_counter()
                 df = fn(spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
                 elapsed = time.perf_counter() - t0
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
                 reps_detail.setdefault(name, []).append(round(elapsed, 4))
-                memo_detail.setdefault(name, []).append(memo_record(drain_events()))
+                memo_detail.setdefault(name, []).append(memo_record(drain_events(), jobs))
                 best = elapsed if best is None else min(best, elapsed)
                 reps = reps_detail[name]
                 if (

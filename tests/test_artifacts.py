@@ -116,3 +116,29 @@ def test_bench_memo_records_line_up_with_reps(spark, monkeypatch):
     cold, warm = res["memo"]["quality_classifier_docs"][:2]
     assert "classifier_model" in cold["built"] and cold["build_s"]["classifier_model"] > 0
     assert "classifier_model" in warm["hit"] and warm["built"] == []
+    # each rep's jobs: the cold rep's training runs jobs the warm one skips
+    assert cold["jobs"] > warm["jobs"] >= 1
+
+
+def test_model_memos_follow_a_rewritten_corpus(spark, tmp_path):
+    # the trained classifier is memoized per corpus file: rewriting the
+    # file in place under the same context refits it, so the scores
+    # still equal the oracle's, which trains on the new file
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from tests.test_oracle import _normalize
+    from tinyetl_spark.queries import ORACLES, QUERIES
+
+    name = "quality_classifier_docs"
+    path = tmp_path / "documents.parquet"
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    for version in (docs, docs.slice(0, 300)):
+        pq.write_table(version, path)
+        got = QUERIES[name](spark, str(tmp_path)).toPandas()
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+        want = con.execute(ORACLES[name]).df()
+        con.close()
+        assert len(got) == version.num_rows
+        assert _normalize(got) == _normalize(want)

@@ -1875,6 +1875,47 @@ def test_inference_batches_matches_python_brute(spark):
     check()
 
 
+def test_dsir_parsed_feature_count_matches_explode(spark):
+    """The fit reads feature totals from size(words) + max(size - 1, 0)
+    instead of exploding: per document that must equal the number of
+    exploded features, and the whitespace-split word count, on blank,
+    one-word and irregular-whitespace texts."""
+    from collections import Counter
+
+    from tinyetl_spark.operators.dsir import _N_FEATURES, _features, _words
+
+    texts = [
+        "", "   ", "one", "Two  Words", "tab\tsep\tar", "new\nline\n\nend",
+        "  lead and trail  ", "\t\n mixed \t ws \n", "a a a", None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    words = _words(df, "text", keep=("doc_id",))
+    parsed = {
+        r.doc_id: r.n for r in words.selectExpr("doc_id", f"{_N_FEATURES} AS n").collect()
+    }
+    exploded = Counter(r.doc_id for r in _features(words, keep=("doc_id",)).collect())
+    want = {}
+    for i, t in enumerate(texts):
+        n = len((t or "").split())
+        want[i] = n + max(n - 1, 0)
+    assert parsed == want
+    assert {i: exploded.get(i, 0) for i in range(len(texts))} == want
+
+
+def test_dsir_empty_pool_selects_nothing(spark):
+    """An empty raw pool fits (count 0) and selects 0 rows, no error."""
+    from tinyetl_spark.operators.dsir import dsir_fit, dsir_select
+
+    target = spark.createDataFrame(
+        [(1000, "alpha beta gamma")], "doc_id long, text string"
+    )
+    pool = spark.createDataFrame([], "doc_id long, text string")
+    fitted = dsir_fit(target, pool)
+    assert fitted[1] == 0
+    assert dsir_select(target, pool, fitted=fitted).collect() == []
+    assert dsir_select(target, pool).collect() == []
+
+
 def test_dsir_scores_match_python_reference(spark):
     """Independent pin for DSIR: a pure-Python reimplementation of the
     hashed-feature model (same md5 bucket hash, same add-half

@@ -18,13 +18,16 @@ from tinyetl_spark.queries import ORACLES, QUERIES
 # verify budget — opt in with `-m full`. A smoke set stays in the
 # default tier so it checks values: one query per parsed-fold builder
 # (norm_col, cosine_col against a column and against a literal array,
-# the Viterbi token fold, the 2-best Viterbi fold).
+# the Viterbi token fold, the 2-best Viterbi fold), plus the two queries
+# that reuse a memoized fit (DSIR's bucket model, the Count-Min sketch).
 SMOKE = {
     "embedding_norms",
     "ann_brute_topk",
     "ann_binary_rerank_topk",
     "unigram_encode_docs",
     "unigram_ambiguity",
+    "dsir_select_docs",
+    "count_min_heavy_hitters",
 }
 
 

@@ -593,16 +593,38 @@ def test_all_registered_queries_emit_scalar_columns(spark):
 
 
 def test_dsir_select_broadcast_model_takeordered_no_python(spark):
-    """DSIR: the 4096-row log-ratio model must BROADCAST back into the
-    pool's feature stream (the pool is never shuffled for the join),
-    selection must be a TakeOrdered (no global sort of the pool), and
-    no Python anywhere. The single SortMergeJoin allowed is the
-    bucket-model full-outer (<= 4096 rows a side — Spark's broadcast
-    hash join does not support full outer), which is bounded by the
-    feature space, not the corpus."""
+    """DSIR selection: the fitted 4096-row log-ratio model must
+    BROADCAST back into the pool's feature stream (the pool is never
+    shuffled for the join), selection must be a TakeOrdered (no global
+    sort of the pool), and no Python anywhere. The fit is not in this
+    plan: the model is read from its checkpoint, so no SortMergeJoin."""
     p = plan_of(spark, "dsir_select_docs")
     assert "TakeOrderedAndProject" in p
-    assert "BroadcastHashJoin" in p
+    assert "BroadcastHashJoin" in p and "BroadcastExchange" in p
+    assert "SortMergeJoin" not in p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+
+
+def test_dsir_fit_plan_one_bounded_join_no_python(spark, monkeypatch):
+    """DSIR fit: the plan its checkpoint runs holds at most one
+    SortMergeJoin, the bucket-model full outer join (<= 4096 rows a
+    side — Spark's broadcast hash join does not support full outer),
+    which is bounded by the feature space, not the corpus. No Python."""
+    from tinyetl_spark.operators.dsir import dsir_fit
+    from tinyetl_spark.queries import load
+
+    docs = load(spark, SF_DIR, "documents")
+    cls = type(docs)
+    checkpoint = cls.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    dsir_fit(docs.filter("doc_id % 97 = 0"), docs.filter("doc_id % 97 <> 0"))
+    (p,) = plans
     assert p.count("SortMergeJoin") <= 1
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 

@@ -11,16 +11,21 @@ noise for proper sampling. Feature hashing bounds the model at
 ``buckets`` rows no matter how large either corpus's vocabulary is.
 
 Spark-first shape (reference parity: the reference has no selection
-tier — SURVEY.md §2 extension):
+tier — SURVEY.md §2 extension), split into a fit and a selection:
 
-* ONE corpus scan per side builds the bucket-count tables — the
-  per-document unigram+bigram features assemble in-row (array HOFs)
-  and explode once, then a map-side-combined groupBy on the bucket id.
-* The model is exactly ``buckets`` rows of log-ratios — broadcast back
-  into the feature stream; the pool is shuffled only by doc_id for the
-  per-document weight sum.
-* Selection is a deterministic top-k (count-desc TakeOrdered shape) —
-  no global sort of the pool.
+* ``dsir_fit`` builds the model once per corpus: ONE collect reads both
+  feature totals and the pool's document count (a document's feature
+  count is ``n + max(n - 1, 0)`` for ``n`` words, so the totals need no
+  explode), then one scan per side explodes the per-document
+  unigram+bigram features — one parsed SQL expression, no Python
+  lambdas — into a map-side-combined groupBy on the bucket id. The
+  ``buckets``-row model of log-ratios is returned checkpointed, so a
+  caller that keeps it (the registered query memoizes it per corpus
+  file) never refits.
+* ``dsir_scores`` / ``dsir_select`` take ``fitted=`` and only score: the
+  model broadcasts back into the pool's feature stream, the pool is
+  shuffled only by doc_id for the per-document weight sum, and the
+  selection is a deterministic top-k (TakeOrdered) — no global sort.
 
 Engine-proof arithmetic: per-bucket log-ratios are computed from
 exact integer counts and rounded to 9 decimals (both engines round
@@ -31,44 +36,49 @@ reported score uses the floor_round half-up convention.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tinyetl_spark.functions.hashing import hash64_col, hash64_sql
-from tinyetl_spark.operators.text import floor_round, floor_round_sql, words_col, words_sql
+from tinyetl_spark.functions.hashing import hash64_sql
+from tinyetl_spark.operators.text import floor_round, floor_round_sql, words_sql
 
 DSIR_BUCKETS = 4096     # hashed-feature space (10k-100k in the paper)
 DSIR_KEEP_PCT = 25      # pool fraction the selection query keeps
 
 
-def _features(df: DataFrame, text_col: str, keep: tuple[str, ...] = ()) -> DataFrame:
-    """One row per feature occurrence: (*keep, b) — bucket ids of every
-    unigram and bigram of the lower-cased text. The word array
-    materializes in its OWN projection before any lambda references it:
-    an expression referenced inside a HOF lambda re-evaluates per
-    element (the repo's documented re-evaluation trap — the inlined
-    form re-split every document once per bigram position, ~14x
-    slower), a bound column reference does not. Empty-word artifacts
-    (blank docs split to ['']) are filtered before hashing."""
-    cols = [F.col(c) for c in keep]
-    staged = df.select(
-        *cols,
-        F.filter(
-            words_col(F.lower(F.col(text_col))), lambda w: F.length(w) > 0
-        ).alias("_ws"),
-    )
-    uni = F.transform(F.col("_ws"), lambda w: hash64_col(w) % DSIR_BUCKETS)
-    big = F.when(
-        F.size("_ws") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_ws") - 1),
-            lambda i: hash64_col(
-                F.concat_ws(" ", F.element_at("_ws", i), F.element_at("_ws", i + 1))
-            )
-            % DSIR_BUCKETS,
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<bigint>)"))
-    return staged.select(*cols, F.explode(F.concat(uni, big)).alias("b"))
+def _bucket(s: str) -> str:
+    """Spark SQL for hash64_col(s) % DSIR_BUCKETS."""
+    return f"CAST(conv(substr(md5({s}), 1, 15), 16, 10) AS BIGINT) % {DSIR_BUCKETS}"
+
+
+# Per-document features over the staged word array ``_ws``: the bucket
+# of every unigram, then of every bigram (slice element i is word i+1,
+# so its predecessor is ``_ws[i]``). The Spark twin of
+# _feature_array_sql.
+_BIGRAM = "concat(_ws[i], ' ', w)"
+_FEATURES = (
+    f"concat(transform(_ws, w -> {_bucket('w')}), "
+    f"transform(slice(_ws, 2, size(_ws)), (w, i) -> {_bucket(_BIGRAM)}))"
+)
+# the length of _FEATURES, without building it
+_N_FEATURES = "size(_ws) + greatest(size(_ws) - 1, 0)"
+
+
+def _words(df: DataFrame, text_col: str, keep: tuple[str, ...] = ()) -> DataFrame:
+    """(*keep, _ws): the lower-cased words, in their OWN projection
+    before any lambda references them: an expression referenced inside
+    a HOF lambda re-evaluates per element (the repo's documented
+    re-evaluation trap — the inlined form re-split every document once
+    per bigram position, ~14x slower), a bound column reference does
+    not. Empty-word artifacts (blank docs split to ['']) are dropped,
+    and a NULL text has no words."""
+    ws = f"filter(split(trim(lower(coalesce(`{text_col}`, ''))), '\\\\s+'), w -> length(w) > 0)"
+    return df.select(*keep, F.expr(ws).alias("_ws"))
+
+
+def _features(words: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """One row per feature occurrence: (*keep, b)."""
+    return words.select(*keep, F.explode(F.expr(_FEATURES)).alias("b"))
 
 
 def _feature_array_sql(text_col: str) -> str:
@@ -83,49 +93,34 @@ def _feature_array_sql(text_col: str) -> str:
     return f"list_concat({uni}, {big})"
 
 
-def _bucket_counts(df: DataFrame, text_col: str) -> DataFrame:
-    """(b, cnt): hashed-feature occurrence counts — at most
-    DSIR_BUCKETS rows after ONE map-side-combined shuffle."""
-    return _features(df, text_col).groupBy("b").agg(F.count("*").alias("cnt"))
+def dsir_fit(target: DataFrame, raw: DataFrame, text_col: str = "text") -> tuple[DataFrame, int]:
+    """The fitted model and the pool's document count: ``(model, n)``.
 
-
-def dsir_weights(
-    target: DataFrame,
-    raw: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """The fitted model: (b, lam) for every occupied bucket, where
+    ``model`` is (b, lam) for every occupied bucket, checkpointed, where
     lam = round(ln( ((ct+0.5)/(T+0.5B)) / ((cr+0.5)/(R+0.5B)) ), 9)
     with add-half smoothing — an exact rational inside one ln, so the
     9dp rounding is the only float step. Buckets absent from BOTH
     sides contribute nothing (their smoothed ratio is a constant that
-    cancels in ranking)."""
-    # checkpoint the count tables BEFORE the totals collect: each is
-    # <= DSIR_BUCKETS rows by construction, and without the cut both
-    # the totals job and the final scoring plan would re-run the
-    # corpus-sized feature scans (3 scans of the pool -> 1)
-    ct = _bucket_counts(target, text_col).localCheckpoint()
-    cr = _bucket_counts(raw, text_col).localCheckpoint()
-    t_tot = int(ct.agg(F.sum("cnt")).collect()[0][0] or 0)
-    r_tot = int(cr.agg(F.sum("cnt")).collect()[0][0] or 0)
-    tn = float(t_tot) + 0.5 * DSIR_BUCKETS
-    rn = float(r_tot) + 0.5 * DSIR_BUCKETS
-    joined = (
-        ct.withColumnRenamed("cnt", "ct")
-        .join(cr.withColumnRenamed("cnt", "cr"), "b", "full_outer")
-        .select(
-            "b",
-            F.coalesce(F.col("ct"), F.lit(0)).alias("ct"),
-            F.coalesce(F.col("cr"), F.lit(0)).alias("cr"),
-        )
+    cancels in ranking). The totals T and R and the count n come from
+    one collect; the checkpoint then runs the two bucket-count scans
+    and their full outer join (at most DSIR_BUCKETS rows a side)."""
+    tw, rw = _words(target, text_col), _words(raw, text_col)
+    t_tot, r_tot, n = (
+        tw.selectExpr(f"{_N_FEATURES} AS t", "0 AS r", "0 AS n")
+        .unionByName(rw.selectExpr("0 AS t", f"{_N_FEATURES} AS r", "1 AS n"))
+        .selectExpr("sum(t)", "sum(r)", "sum(n)")
+        .collect()[0]
     )
-    lam = F.round(
-        F.log(
-            ((F.col("ct") + 0.5) / F.lit(tn)) / ((F.col("cr") + 0.5) / F.lit(rn))
-        ),
-        9,
+    tn = float(t_tot or 0) + 0.5 * DSIR_BUCKETS
+    rn = float(r_tot or 0) + 0.5 * DSIR_BUCKETS
+    ct = _features(tw).groupBy("b").agg(F.count("*").alias("ct"))
+    cr = _features(rw).groupBy("b").agg(F.count("*").alias("cr"))
+    model = ct.join(cr, "b", "full_outer").selectExpr(
+        "b",
+        f"round(ln(((coalesce(ct, 0) + 0.5D) / {tn!r}D)"
+        f" / ((coalesce(cr, 0) + 0.5D) / {rn!r}D)), 9) AS lam",
     )
-    return joined.select("b", lam.alias("lam"))
+    return model.localCheckpoint(), int(n or 0)
 
 
 def dsir_scores(
@@ -133,14 +128,16 @@ def dsir_scores(
     raw: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
+    fitted: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Per-raw-document importance weight: (doc_id, n_features, score)
     with score = mean bucket log-ratio over the doc's features (mean,
     not sum, so long documents aren't automatically 'more target-like'
-    — the paper normalizes comparably). Model broadcast; the pool
-    shuffles once on doc_id."""
-    model = dsir_weights(target, raw, text_col)
-    feats = _features(raw, text_col, keep=(id_col,))
+    — the paper normalizes comparably). ``fitted`` is a ``dsir_fit``
+    result for the same target and pool; without it the model is fit
+    here. Model broadcast; the pool shuffles once on doc_id."""
+    model, _ = fitted or dsir_fit(target, raw, text_col)
+    feats = _features(_words(raw, text_col, keep=(id_col,)), keep=(id_col,))
     return (
         feats.join(F.broadcast(model), "b")
         .select(F.col(id_col), F.col("lam").cast("decimal(38,9)").alias("_lam"))
@@ -160,18 +157,19 @@ def dsir_select(
     text_col: str = "text",
     id_col: str = "doc_id",
     keep_pct: int = DSIR_KEEP_PCT,
+    fitted: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Keep the top ``keep_pct`` percent of the raw pool by importance
     weight (score desc, doc_id asc — fully deterministic; Gumbel-noise
     sampling drops in by adding seeded-hash noise to the rank key).
-    The limit is computed from a count, so the plan is a TakeOrdered,
-    never a global sort."""
-    n = raw.count()
-    k = max(1, (n * keep_pct) // 100)
+    The limit comes from the fit's pool count, so the plan is a
+    TakeOrdered, never a global sort."""
+    fitted = fitted or dsir_fit(target, raw, text_col)
+    k = max(1, (fitted[1] * keep_pct) // 100)
     return (
-        dsir_scores(target, raw, text_col, id_col)
+        dsir_scores(target, raw, text_col, id_col, fitted=fitted)
         .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(int(k))
+        .limit(k)
     )
 
 
