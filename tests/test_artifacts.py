@@ -142,3 +142,37 @@ def test_model_memos_follow_a_rewritten_corpus(spark, tmp_path):
         con.close()
         assert len(got) == version.num_rows
         assert _normalize(got) == _normalize(want)
+
+
+def test_staged_tables_follow_a_rewritten_input(spark, tmp_path):
+    # a staged table is keyed by the versions of the files under
+    # sf_dir: rewriting embeddings.parquet in place under the same
+    # context stages the PQ code table again, so the top-k read off it
+    # still equals the oracle's over the new file. The rewrite drops the
+    # first answer's neighbours, so a stale code table cannot pass.
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.test_oracle import _normalize
+    from tinyetl_spark.queries import ORACLES, QUERIES
+
+    name = "ann_pq_topk"
+    path = tmp_path / "embeddings.parquet"
+
+    def top_ids(table) -> set[int]:
+        pq.write_table(table, path)
+        got = QUERIES[name](spark, str(tmp_path)).toPandas()
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        want = con.execute(ORACLES[name]).df()
+        con.close()
+        assert len(got) == 10
+        assert _normalize(got) == _normalize(want)
+        return {int(v) for v in got["vec_id"]}
+
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    first = top_ids(emb)
+    gone = pc.is_in(emb["vec_id"], value_set=pa.array(sorted(first), pa.int64()))
+    assert not first & top_ids(emb.filter(pc.invert(gone)))

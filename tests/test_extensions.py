@@ -259,7 +259,7 @@ def test_pq_trained_recall_and_compression(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     books = similarity.train_pq_codebooks(emb, seed=7)
     assert len(books) == 8 and len(books[0]) == 16 and len(books[0][0]) == 8
-    codes = similarity.pq_encode(emb, books).collect()
+    codes = similarity.rpq_encode(emb, [books]).collect()
     assert all(0 <= c <= 15 for r in codes for c in r.codes)
     assert all(len(r.codes) == 8 for r in codes)
 
@@ -276,7 +276,8 @@ def test_pq_trained_recall_and_compression(spark):
     # production PQ is shortlist-then-exact-rerank: the ADC top-50
     # shortlist must hold most of the true top-10 (chance: 50/500)
     short = {
-        r.vec_id for r in similarity.pq_topk(emb, query_id=0, k=50, codebooks=books).collect()
+        r.vec_id
+        for r in similarity.rpq_topk(emb, query_id=0, k=50, stages=[books]).collect()
     }
     assert len(exact_ids & short) >= 5
 
@@ -286,7 +287,7 @@ def test_ann_query_id_not_found_raises_clearly(spark):
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     with pytest.raises(ValueError, match="not found"):
-        similarity.pq_topk(emb, query_id=10**9)
+        similarity.rpq_topk(emb, query_id=10**9, stages=similarity._rpq_stages(1))
     with pytest.raises(ValueError, match="not found"):
         similarity.ivf_pq_topk(emb, query_id=10**9)
     with pytest.raises(ValueError, match="not found"):

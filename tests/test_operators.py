@@ -277,7 +277,7 @@ def test_epoch_shuffle_is_permutation_and_seed_sensitive(spark):
 
 def test_trained_pq_beats_seeded_on_adc_recall(spark):
     """The production PQ path: train_pq_codebooks on the bounded
-    driver-side sample, then the same pq_topk machinery. Trained
+    driver-side sample, then the same rpq_topk machinery. Trained
     codebooks must reach at least the seeded books' recall@10 against
     brute force (they model the data; the seeded books only model its
     scale), and the whole path must be deterministic."""
@@ -293,21 +293,82 @@ def test_trained_pq_beats_seeded_on_adc_recall(spark):
     probes = [0, 7, 21]
 
     def recall(codebooks) -> float:
-        enc = sim.pq_encode(df, codebooks)
+        enc = sim.rpq_encode(df, [codebooks])
         hits = 0
         for q in probes:
             exact = {r[0] for r in sim.brute_topk(df, q, 10).collect()}
-            qv = sim._query_vec(df, q, "embedding", "vec_id")
             approx = {
                 r[0]
-                for r in sim._adc_topk(
-                    enc.filter(enc.vec_id != q), sim._pq_dtab(qv, codebooks), 10, "vec_id"
-                ).collect()
+                for r in sim.rpq_topk(df, q, 10, stages=[codebooks], enc=enc).collect()
             }
             hits += len(exact & approx)
         return hits / (10.0 * len(probes))
 
     assert recall(books) >= recall(sim._pq_seeded_codebooks())
+
+
+def test_rpq_codec_matches_python_reconstruction(spark):
+    """The one residual-PQ codec at 1 (PQ), 2 (RPQ) and 3 (RPQ3)
+    stages, by value on a seeded frame of unit vectors: codes equal a
+    plain-Python greedy encoder and nest as prefixes; rpq_topk ranks by
+    the reconstruction distance ||q - Σ_s b_s[c_s]||² with ties broken
+    by id; and each unrounded ADC distance is that distance plus
+    (n-1)||q||² within 1e-9 (the rounded one within 5e-7 of it)."""
+    import math
+    import random
+
+    from tinyetl_spark.operators import similarity as sim
+
+    rng = random.Random(14)
+    rows = []
+    for i in range(60):
+        v = [rng.gauss(0.0, 1.0) for _ in range(64)]
+        norm = math.sqrt(sum(x * x for x in v))
+        rows.append((i, [x / norm for x in v]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
+    q = vecs[0]
+    qq = sum(x * x for x in q)
+
+    def py_encode(v, stages):
+        codes, r = [], list(v)
+        for books in stages:
+            stage = []
+            for j, book in enumerate(books):
+                sub = r[j * 8 : (j + 1) * 8]
+                d = [sim._seq_sqdist(sub, c) for c in book]
+                stage.append(d.index(min(d)))
+            for j, c in enumerate(stage):
+                r[j * 8 : (j + 1) * 8] = [x - y for x, y in zip(r[j * 8 : (j + 1) * 8], books[j][c])]
+            codes += stage
+        return codes
+
+    def recon_dist(codes, stages):
+        rec = [0.0] * 64
+        for s, books in enumerate(stages):
+            for j in range(8):
+                for i, y in enumerate(books[j][codes[s * 8 + j]]):
+                    rec[j * 8 + i] += y
+        return sum((a - b) ** 2 for a, b in zip(q, rec))
+
+    prev = None
+    for n in (1, 2, 3):
+        stages = sim._rpq_stages(n)
+        enc = sim.rpq_encode(df, stages)
+        dtabs, crosses = sim._rpq_tabs(q, stages)
+        adc = sim._rpq_adc(dtabs, {st: sim._lit_array(c) for st, c in crosses.items()})
+        got = {r.vec_id: (list(r.codes), r.d) for r in enc.select("vec_id", "codes", adc.alias("d")).collect()}
+        assert {i: c for i, (c, _) in got.items()} == {i: py_encode(v, stages) for i, v in vecs.items()}
+        if prev is not None:
+            assert all(got[i][0][: 8 * (n - 1)] == prev[i] for i in vecs)
+        prev = {i: c for i, (c, _) in got.items()}
+        dist = {i: recon_dist(c, stages) for i, (c, _) in got.items() if i != 0}
+        for i, d in dist.items():
+            assert abs(got[i][1] - (d + (n - 1) * qq)) <= 1e-9, (n, i)
+        top = sim.rpq_topk(df, 0, 10, stages=stages).collect()
+        assert [r.vec_id for r in top] == sorted(dist, key=lambda i: (dist[i], i))[:10], n
+        for r in top:
+            assert abs(r.adc_dist - (dist[r.vec_id] + (n - 1) * qq)) <= 5e-7 + 1e-9
 
 
 def test_zorder_write_clusters_both_columns(spark, tmp_path):
@@ -1654,15 +1715,23 @@ def test_ann_budget_curve_monotone(spark):
     from tinyetl_spark.queries import QUERIES
 
     rows = QUERIES["ann_budget_curve"](spark, SF_DIR).collect()
-    for knob in ("rpq3_shortlist", "ivf_nprobe"):
-        by_budget: dict[int, list[float]] = {}
-        for r in rows:
-            if r["knob"] == knob:
-                by_budget.setdefault(int(r["budget"]), []).append(r["recall"])
-        means = [
-            sum(v) / len(v) for _, v in sorted(by_budget.items())
-        ]
-        assert all(a <= b + 1e-9 for a, b in zip(means, means[1:])), (knob, means)
+    # 5 codecs x 3 shortlists x 4 probes, and 3 nprobes x 4 probes: a
+    # grid that came back empty would pass the monotonicity loop below
+    assert sum(r["knob"] == "shortlist_rerank" for r in rows) == 60
+    assert sum(r["knob"] == "ivf_nprobe" for r in rows) == 12
+    curves: dict[tuple[str, str], dict[int, list[float]]] = {}
+    for r in rows:
+        curves.setdefault((r["knob"], r["codec"]), {}).setdefault(
+            int(r["budget"]), []
+        ).append(r["recall"])
+    assert sorted(curves) == [
+        ("ivf_nprobe", "float32"),
+        *[("shortlist_rerank", c) for c in ("binary", "int8", "mrl16", "pq8", "rpq3")],
+    ]
+    for curve, by_budget in curves.items():
+        assert len(by_budget) == 3, curve
+        means = [sum(v) / len(v) for _, v in sorted(by_budget.items())]
+        assert all(a <= b + 1e-9 for a, b in zip(means, means[1:])), (curve, means)
 
 
 def test_dsir_prefers_target_like_docs(spark):

@@ -18,12 +18,16 @@ from tinyetl_spark.queries import ORACLES, QUERIES
 # verify budget — opt in with `-m full`. A smoke set stays in the
 # default tier so it checks values: one query per parsed-fold builder
 # (norm_col, cosine_col against a column and against a literal array,
-# the Viterbi token fold, the 2-best Viterbi fold), plus the two queries
-# that reuse a memoized fit (DSIR's bucket model, the Count-Min sketch).
+# the Viterbi token fold, the 2-best Viterbi fold), the two queries
+# that reuse a memoized fit (DSIR's bucket model, the Count-Min sketch),
+# and the residual-PQ codec at its two ends: 1 stage, no cross term
+# (PQ) and 3 stages, three cross tables (RPQ3, reranked).
 SMOKE = {
     "embedding_norms",
     "ann_brute_topk",
     "ann_binary_rerank_topk",
+    "ann_pq_topk",
+    "ann_rpq3_rerank_topk",
     "unigram_encode_docs",
     "unigram_ambiguity",
     "dsir_select_docs",

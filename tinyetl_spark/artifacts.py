@@ -65,12 +65,32 @@ def drain_events() -> list[tuple[str, str, float]]:
     return out
 
 
+def file_version(sf_dir: str, table: str) -> tuple | None:
+    """``(path, st_mtime_ns, st_size)`` of a table's file, so a
+    rewritten file is a new artifact key; None where ``os.stat`` cannot
+    reach the path (a remote URL)."""
+    path = f"{sf_dir}/{table}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
+
+
 def staged_path(sf_dir: str, name: str, version_key: str) -> str:
     """Where ``staged`` keeps a table. The name embeds a hash of
     ``version_key`` (each caller passes its oracle-SQL twin, which
-    encodes every constant of the producing pipeline), so a code change
-    stages a new table instead of silently reusing stale data."""
-    tag = hashlib.md5(version_key.encode()).hexdigest()[:10]
+    encodes every constant of the producing pipeline) and of the
+    ``file_version`` of every ``*.parquet`` entry directly under
+    ``sf_dir``, so a code change or a rewritten input stages a new
+    table instead of silently reusing stale data. A directory
+    ``os.listdir`` cannot read (a remote URL) adds no versions."""
+    try:
+        entries = sorted(e for e in os.listdir(sf_dir) if e.endswith(".parquet"))
+    except OSError:
+        entries = []
+    inputs = [file_version(sf_dir, e[: -len(".parquet")]) for e in entries]
+    tag = hashlib.md5(repr((version_key, inputs)).encode()).hexdigest()[:10]
     return roundtrip_dir(sf_dir, f"{name}_{tag}.parquet")
 
 

@@ -20,7 +20,7 @@ from typing import TypeVar
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tinyetl_spark.artifacts import memo, roundtrip_dir, staged, staged_path
+from tinyetl_spark.artifacts import file_version, memo, roundtrip_dir, staged, staged_path
 from tinyetl_spark.functions.dates import FORMATS, parse_date_multi, parse_date_multi_sql
 from tinyetl_spark.functions.hashing import hash64_col, hash64_sql
 from tinyetl_spark.operators import (
@@ -120,7 +120,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     inferred on every read."""
     _ensure_runtime_confs(spark)
     path = f"{sf_dir}/{table}.parquet"
-    key = _file_version(sf_dir, table)
+    key = file_version(sf_dir, table)
     if key is None:
         df = spark.read.parquet(path)  # Spark reports a missing path
     else:
@@ -129,26 +129,14 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return _normalize_events_ts(df) if table == "events" else df
 
 
-def _file_version(sf_dir: str, table: str) -> tuple | None:
-    """``(path, st_mtime_ns, st_size)`` of a testdata table's file, so a
-    rewritten file is a new artifact key; None where ``os.stat`` cannot
-    reach the path (a remote URL)."""
-    path = f"{sf_dir}/{table}.parquet"
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (path, st.st_mtime_ns, st.st_size)
-
-
 def _corpus_memo(
     spark: SparkSession, name: str, sf_dir: str, table: str, build: Callable[[], V]
 ) -> V:
     """``build()`` once per version of ``table``'s file (the artifact
-    store's ``memo`` keyed by ``_file_version``): a model fit on a
+    store's ``memo`` keyed by ``file_version``): a model fit on a
     corpus is never served for a rewritten one. A file ``os.stat``
     cannot reach is not memoized."""
-    key = _file_version(sf_dir, table)
+    key = file_version(sf_dir, table)
     return build() if key is None else memo(spark, name, key, build)
 
 
@@ -5021,16 +5009,22 @@ def _materialized_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ code table staged once — the production shape: the index is
-    built at ingest and every query (serving top-k, rerank, recall
-    audit) reads it, never re-encodes the corpus."""
+_RPQ_CODE_TABLES = ("pq_codes", "rpq_codes", "rpq3_codes")
+
+
+def _materialized_rpq_codes(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """The n-stage residual-PQ code table (n=1 is PQ) staged once — the
+    production shape: the index is built at ingest and every query
+    (serving top-k, rerank, recall audit) reads it, never re-encodes
+    the corpus. Version key: the twin SQL, which embeds every stage
+    codebook."""
+    stages = similarity._rpq_stages(n)
     return staged(
         spark,
         sf_dir,
-        "pq_codes",
-        similarity.pq_encode_sql(),
-        lambda: similarity.pq_encode(load(spark, sf_dir, "embeddings")),
+        _RPQ_CODE_TABLES[n - 1],
+        similarity.rpq_topk_sql(stages=stages),
+        lambda: similarity.rpq_encode(load(spark, sf_dir, "embeddings"), stages),
     )
 
 
@@ -5048,18 +5042,6 @@ def _materialized_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized_rpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual-PQ code table staged once (version key: the rpq twin
-    SQL, which embeds every stage-codebook constant)."""
-    return staged(
-        spark,
-        sf_dir,
-        "rpq_codes",
-        similarity.rpq_topk_sql("embeddings", 0, 10),
-        lambda: similarity.rpq_encode(load(spark, sf_dir, "embeddings")),
-    )
-
-
 @_q("pq_encode_vectors", similarity.pq_encode_codes_sql())
 def pq_encode_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization: each 64-dim vector -> 8 nearest-subcentroid
@@ -5068,22 +5050,25 @@ def pq_encode_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle shares the deterministic codebook literals. Codes project as
     a comma-joined string here (scalar columns only — the driver's
     canonicalizer can't sort array cells); internal consumers
-    (pq_topk/rerank) keep the array form from pq_encode."""
-    enc = similarity.pq_encode(load(spark, sf_dir, "embeddings"))
+    (rpq_topk/rerank) keep the array form from rpq_encode."""
+    enc = similarity.rpq_encode(
+        load(spark, sf_dir, "embeddings"), similarity._rpq_stages(1)
+    )
     return enc.select(
         "vec_id",
         F.concat_ws(",", F.col("codes").cast("array<string>")).alias("codes"),
     )
 
 
-@_q("ann_pq_topk", similarity.pq_topk_sql(query_id=0, k=10))
+@_q("ann_pq_topk", similarity.rpq_topk_sql(stages=similarity._rpq_stages(1)))
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance top-k: the query-to-subcentroid distance
     table is driver-computed and inlined (broadcast at scale); each
     corpus vector costs m table lookups — no vector math in the scan."""
-    return similarity.pq_topk(
+    return similarity.rpq_topk(
         load(spark, sf_dir, "embeddings"), query_id=0, k=10,
-        enc=_materialized_pq_codes(spark, sf_dir),
+        stages=similarity._rpq_stages(1),
+        enc=_materialized_rpq_codes(spark, sf_dir, 1),
     )
 
 
@@ -5098,14 +5083,15 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ann_pq_rerank_topk", similarity.pq_rerank_topk_sql(query_id=0, k=10, shortlist=50))
+@_q("ann_pq_rerank_topk", similarity.rpq_rerank_topk_sql(stages=similarity._rpq_stages(1)))
 def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortlist-then-rerank, PQ as actually served: ADC over codes
     picks 50 candidates, exact cosine reranks only those — recall from
     the shortlist width, precision from the exact pass."""
-    return similarity.pq_rerank_topk(
+    return similarity.rpq_rerank_topk(
         load(spark, sf_dir, "embeddings"), query_id=0, k=10, shortlist=50,
-        enc=_materialized_pq_codes(spark, sf_dir),
+        stages=similarity._rpq_stages(1),
+        enc=_materialized_rpq_codes(spark, sf_dir, 1),
     )
 
 
@@ -5120,7 +5106,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ann_rpq_topk", similarity.rpq_topk_sql(query_id=0, k=10))
+@_q("ann_rpq_topk", similarity.rpq_topk_sql(stages=similarity._rpq_stages(2)))
 def ann_rpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual-PQ ADC top-k: stage-2 codes quantize what stage 1
     missed; ranking is the exact reconstruction distance via per-stage
@@ -5129,39 +5115,24 @@ def ann_rpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for one-stage PQ on the same probes)."""
     return similarity.rpq_topk(
         load(spark, sf_dir, "embeddings"), query_id=0, k=10,
-        enc=_materialized_rpq_codes(spark, sf_dir),
+        stages=similarity._rpq_stages(2),
+        enc=_materialized_rpq_codes(spark, sf_dir, 2),
     )
 
 
-@_q("ann_rpq_rerank_topk", similarity.rpq_rerank_topk_sql(query_id=0, k=10, shortlist=50))
+@_q("ann_rpq_rerank_topk", similarity.rpq_rerank_topk_sql(stages=similarity._rpq_stages(2)))
 def ann_rpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual-PQ shortlist + exact cosine rerank — the serving tier
     with the strongest compressed ranking underneath (recall@10 0.72 at
     shortlist 50 vs 0.54 for one-stage PQ)."""
     return similarity.rpq_rerank_topk(
         load(spark, sf_dir, "embeddings"), query_id=0, k=10, shortlist=50,
-        enc=_materialized_rpq_codes(spark, sf_dir),
+        stages=similarity._rpq_stages(2),
+        enc=_materialized_rpq_codes(spark, sf_dir, 2),
     )
 
 
-def _materialized_rpq3_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-stage residual-PQ code table staged once (version key embeds
-    all three stage codebooks via the twin SQL)."""
-    return staged(
-        spark,
-        sf_dir,
-        "rpq3_codes",
-        similarity.rpq3_topk_sql("embeddings", 0, 10),
-        lambda: similarity.rpq_encode(
-            load(spark, sf_dir, "embeddings"), similarity._rpq3_seeded_stages()
-        ),
-    )
-
-
-@_q(
-    "ann_rpq3_rerank_topk",
-    similarity.rpq3_rerank_topk_sql(query_id=0, k=10, shortlist=50),
-)
+@_q("ann_rpq3_rerank_topk", similarity.rpq_rerank_topk_sql(stages=similarity._rpq_stages(3)))
 def ann_rpq3_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-stage residual-PQ shortlist + exact cosine rerank: recall@10
     0.95 at the SAME 50-wide shortlist where the 2-stage tier measures
@@ -5169,9 +5140,10 @@ def ann_rpq3_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales 0.15/0.08/0.05), not a wider exact-rerank budget. An
     OPQ-style rotation was measured and rejected: isotropic unit-norm
     corpus, recall dropped to 0.675."""
-    return similarity.rpq3_rerank_topk(
+    return similarity.rpq_rerank_topk(
         load(spark, sf_dir, "embeddings"), query_id=0, k=10, shortlist=50,
-        enc=_materialized_rpq3_codes(spark, sf_dir),
+        stages=similarity._rpq_stages(3),
+        enc=_materialized_rpq_codes(spark, sf_dir, 3),
     )
 
 
@@ -5223,14 +5195,11 @@ def _register_ann_recall(tier: str) -> None:
 
     @_q(f"ann_recall_{tier}", similarity.ann_recall_sql("embeddings", tier))
     def _fn(spark: SparkSession, sf_dir: str, _tier=tier) -> DataFrame:
-        fam = similarity.RECALL_TIERS[_tier][2]
+        fam = similarity.RECALL_TIERS[_tier].family
+        stages = similarity.RECALL_TIERS[_tier].stages
         enc_df = None
-        if fam == "pq":
-            enc_df = _materialized_pq_codes(spark, sf_dir)
-        elif fam == "rpq":
-            enc_df = _materialized_rpq_codes(spark, sf_dir)
-        elif fam == "rpq3":
-            enc_df = _materialized_rpq3_codes(spark, sf_dir)
+        if stages:
+            enc_df = _materialized_rpq_codes(spark, sf_dir, stages)
         elif fam == "ivf_pq":
             enc_df = _materialized_ivf_pq_index(spark, sf_dir)
         elif fam == "ivf":
@@ -5274,10 +5243,10 @@ def ann_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_budget_curve(
         load(spark, sf_dir, "embeddings"),
         exact_df=_materialized_ann_exact(spark, sf_dir),
-        enc_df=_materialized_rpq3_codes(spark, sf_dir),
+        enc_df=_materialized_rpq_codes(spark, sf_dir, 3),
         ivf_df=_materialized_ivf_index(spark, sf_dir),
         bin_df=_materialized_binary_codes(spark, sf_dir),
-        pq_df=_materialized_pq_codes(spark, sf_dir),
+        pq_df=_materialized_rpq_codes(spark, sf_dir, 1),
     )
 
 
