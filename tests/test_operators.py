@@ -750,6 +750,9 @@ def test_corpus_ops_handle_empty_input(spark):
     assert text.quality_budget_select(empty).count() == 0
     assert text.epoch_shuffle(empty).count() == 0
     assert text.pack_sequences(empty).count() == 0
+    assert text.inference_batches(empty).count() == 0
+    assert text.concat_chunks(empty).count() == 0
+    assert text.quality_ensemble(empty).count() == 0
     assert dedup.pagerank(pairs).count() == 0
     assert {f.name for f in dedup.pagerank(pairs).schema} == {"doc_id", "pagerank"}
 
@@ -2777,33 +2780,88 @@ def test_mink_prob_semantics(spark):
 
 
 def test_two_phase_rank_matches_window(spark):
-    """Property: the bucketed two-phase rank equals a plain global
-    row_number window (both directions, with value ties crossing
-    bucket boundaries)."""
+    """Property: relational.ordered_prefix equals a plain window over
+    the same order: ranks in both directions with value ties crossing
+    bucket bounds, a weighted exclusive sum, a partition column with
+    one dominant and one NULL partition (and NULL keys), a given
+    bucket column, a single row, and an empty frame with and without
+    partition columns. Its totals equal each partition's sum."""
     from pyspark.sql import Window
 
-    from tinyetl_spark.operators.text import _two_phase_rank
+    from tinyetl_spark.operators.relational import ordered_prefix
+
+    def check(df, key, descending, weight=None, by=(), bucket=None):
+        wt = F.lit(1) if weight is None else F.col(weight)
+        order = [F.desc(key) if descending else F.asc(key), F.asc("doc_id")]
+        plain = (
+            Window.partitionBy(*by)
+            .orderBy(*order)
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        want = {
+            r["doc_id"]: r["o"]
+            for r in df.select(
+                "doc_id", F.coalesce(F.sum(wt).over(plain), F.lit(0)).alias("o")
+            ).collect()
+        }
+        got_df, totals = ordered_prefix(
+            df, key, descending, ("doc_id",), "o", weight=weight, by=by, bucket=bucket
+        )
+        assert got_df.columns == [*df.columns, "o"]
+        got = {r["doc_id"]: r["o"] for r in got_df.collect()}
+        assert got == want
+        want_totals = {
+            tuple(r[c] for c in by): r["t"]
+            for r in df.groupBy(*by).agg(F.sum(wt).alias("t")).collect()
+            if r["t"] is not None
+        }
+        assert totals == want_totals
+        return got
 
     rows = [(i, float((i * 7) % 13)) for i in range(200)]  # many ties
     df = spark.createDataFrame(rows, "doc_id long, v double")
-    for ascending in (False, True):
-        order = [
-            F.asc("v") if ascending else F.desc("v"),
-            F.asc("doc_id"),
-        ]
+    for descending in (True, False):
+        order = [F.desc("v") if descending else F.asc("v"), F.asc("doc_id")]
         want = {
             r["doc_id"]: r["r"]
             for r in df.withColumn(
                 "r", F.row_number().over(Window.orderBy(*order))
             ).collect()
         }
-        got = {
-            r["doc_id"]: r["rk"]
-            for r in _two_phase_rank(
-                df, "v", "doc_id", "rk", ascending=ascending
-            ).collect()
-        }
-        assert got == want
+        got = check(df, "v", descending)
+        assert {d: o + 1 for d, o in got.items()} == want
+
+    weighted = spark.createDataFrame(
+        [(i, float((i * 7) % 13), i % 5) for i in range(200)],
+        "doc_id long, v double, w long",
+    )
+    for descending in (True, False):
+        check(weighted, "v", descending, weight="w")
+
+    srcs = ["big"] * 7 + ["s1", None, "s2"]
+    parts = spark.createDataFrame(
+        [
+            (i, None if i % 17 == 0 else float((i * 7) % 13), i % 5, srcs[i % 10])
+            for i in range(300)
+        ],
+        "doc_id long, v double, w long, src string",
+    )
+    for descending in (True, False):
+        check(parts, "v", descending, by=("src",))
+        check(parts, "v", descending, weight="w", by=("src",))
+
+    quarter = (F.col("v") / 4).cast("int")  # rises with v
+    check(df, "v", False, bucket=quarter)
+    check(df, "v", True, bucket=F.lit(3) - quarter)
+
+    one = spark.createDataFrame([(7, 1.0, "a")], "doc_id long, v double, src string")
+    for descending in (True, False):
+        assert check(one, "v", descending) == {7: 0}
+        assert check(one, "v", descending, by=("src",)) == {7: 0}
+
+    empty = spark.createDataFrame([], "doc_id long, v double, src string")
+    assert check(empty, "v", True) == {}
+    assert check(empty, "v", False, by=("src",)) == {}
 
 
 def test_quality_ensemble_ranks_and_fusion_formula(spark):
@@ -3491,6 +3549,35 @@ def test_classifier_auc_by_source_planted(spark):
     assert out["A"]["auc"] == 1.0      # all pos margins above all neg
     assert out["B"]["auc"] == 0.0      # all pos margins below all neg
     assert (out["A"]["n_pos"], out["A"]["n_neg"]) == (2, 2)
+
+
+def test_classifier_auc_by_source_null_source_matches_python(spark):
+    """A NULL source is a group of its own, as GROUP BY and PARTITION BY
+    treat it in the oracle: its AUC equals a plain-Python pair count
+    (a tie counts half), as do the named sources' AUCs."""
+    import random
+
+    from tinyetl_spark.operators.classifier import classifier_auc_by_source
+
+    rng = random.Random(7)
+    srcs = [None, "A", "B"]
+    rows = []
+    for i in range(90):
+        mu = rng.randint(-6, 6) * 100
+        rows.append((srcs[i % 3], mu, int(mu + rng.randint(-400, 400) > 0)))
+    dummy = spark.createDataFrame(
+        [(i + 1, "x", s) for i, (s, _, _) in enumerate(rows)],
+        "doc_id long, text string, source string",
+    )
+    trained = _fake_trained(spark, [m for _, m, _ in rows], [y for _, _, y in rows])
+    out = {r["source"]: r for r in classifier_auc_by_source(dummy, trained=trained).collect()}
+    assert set(out) == set(srcs)
+    for s in srcs:
+        pos = [m for src, m, y in rows if src == s and y == 1]
+        neg = [m for src, m, y in rows if src == s and y == 0]
+        assert (out[s]["n_pos"], out[s]["n_neg"]) == (len(pos), len(neg))
+        wins = sum((p > n) + 0.5 * (p == n) for p in pos for n in neg)
+        assert abs(out[s]["auc"] - wins / (len(pos) * len(neg))) < 1e-6, s
 
 
 def test_embedding_dim_profile_planted(spark):

@@ -20,8 +20,10 @@ from tinyetl_spark.queries import ORACLES, QUERIES
 # (norm_col, cosine_col against a column and against a literal array,
 # the Viterbi token fold, the 2-best Viterbi fold), the two queries
 # that reuse a memoized fit (DSIR's bucket model, the Count-Min sketch),
-# and the residual-PQ codec at its two ends: 1 stage, no cross term
-# (PQ) and 3 stages, three cross tables (RPQ3, reranked).
+# the residual-PQ codec at its two ends: 1 stage, no cross term
+# (PQ) and 3 stages, three cross tables (RPQ3, reranked), and the
+# two-phase ordered scan partitioned by a column (per-source AUC, and
+# the per-source CCNet tiling whose buckets are quantile cut).
 SMOKE = {
     "embedding_norms",
     "ann_brute_topk",
@@ -32,6 +34,8 @@ SMOKE = {
     "unigram_ambiguity",
     "dsir_select_docs",
     "count_min_heavy_hitters",
+    "classifier_auc_by_source",
+    "perplexity_buckets",
 }
 
 

@@ -6,6 +6,8 @@ fails here, not at 100 TB."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from tests.conftest import SF_DIR
@@ -15,6 +17,67 @@ from tinyetl_spark.queries import QUERIES
 def plan_of(spark, name: str) -> str:
     df = QUERIES[name](spark, SF_DIR)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, looking inside AQE's
+    AdaptiveSparkPlanExec (a leaf whose plan is its executedPlan),
+    query stages and subqueries."""
+    yield node
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        seqs = (node.children(), node.subqueries())
+        kids = [q.apply(i) for q in seqs for i in range(q.size())]
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def window_partitions(df) -> list[tuple[str, ...]]:
+    """Each Window node's partition keys, by name (no expression ids)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    out = []
+    for node in _plan_nodes(plan):
+        if node.getClass().getSimpleName() == "WindowExec":
+            spec = node.partitionSpec()
+            out.append(
+                tuple(re.sub(r"#\d+L?$", "", spec.apply(i).toString()) for i in range(spec.size()))
+            )
+    return out
+
+
+def assert_two_phase(df, by: tuple[str, ...] = ()) -> str:
+    """Every Window partitions by exactly (*by, _b), the range bucket of
+    relational.ordered_prefix, and there is at least one. Returns the
+    plan text for the pin's other checks."""
+    windows = window_partitions(df)
+    assert windows and all(w == (*by, "_b") for w in windows), windows
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def two_phase_plan(spark, name: str, by: tuple[str, ...] = ()) -> str:
+    return assert_two_phase(QUERIES[name](spark, SF_DIR), by)
+
+
+def test_window_walker_flags_a_bare_order_by_window(spark):
+    """The walker reads partition keys off the tree, AQE wrapper
+    included: a bare Window.orderBy has none, and fails the check."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    df = spark.range(10).withColumn("k", F.col("id") % 3)
+    bare = df.withColumn("r", F.row_number().over(Window.orderBy("id")))
+    keyed = df.withColumn("r", F.row_number().over(Window.partitionBy("k").orderBy("id")))
+    assert bare._jdf.queryExecution().executedPlan().getClass().getSimpleName() == (
+        "AdaptiveSparkPlanExec"
+    )
+    assert window_partitions(bare) == [()]
+    assert window_partitions(keyed) == [("k",)]
+    with pytest.raises(AssertionError):
+        assert_two_phase(bare)
 
 
 def test_scan_project_pushdown_and_pruning(spark):
@@ -263,9 +326,8 @@ def test_epoch_shuffle_window_is_bucket_partitioned(spark):
     unpartitioned ORDER BY window (single-reducer corpus funnel); the
     cumulative offsets ride as a literal map lookup — NO join anywhere
     (a joined offsets table trips the constraint-inference bug
-    _offset_map documents)."""
-    p = plan_of(spark, "epoch_shuffle_docs")
-    assert "windowspecdefinition(_b" in p
+    relational.ordered_prefix documents)."""
+    p = two_phase_plan(spark, "epoch_shuffle_docs")
     assert "Join" not in p
 
 
@@ -273,8 +335,7 @@ def test_pack_sequences_window_is_bucket_partitioned(spark):
     """Same two-phase contract as epoch_shuffle: the running-total
     window partitions on the id-range bucket, never a bare ORDER BY;
     offsets are a literal map, no join."""
-    p = plan_of(spark, "pack_sequences_docs")
-    assert "windowspecdefinition(_b" in p
+    p = two_phase_plan(spark, "pack_sequences_docs")
     assert "Join" not in p
 
 
@@ -421,8 +482,7 @@ def test_quality_budget_window_is_bucket_partitioned(spark):
     prefix sum windows on the quantile bucket, never a bare ORDER BY
     (single-reducer corpus funnel); offsets are a literal map, no
     join."""
-    p = plan_of(spark, "quality_budget_select")
-    assert "windowspecdefinition(_b" in p
+    p = two_phase_plan(spark, "quality_budget_select")
     assert "Join" not in p
 
 
@@ -445,8 +505,7 @@ def test_curation_pipeline_two_phase_no_python(spark):
     """The composed curation plan keeps every stage's scale contract:
     the budget/shuffle windows stay bucket-partitioned and no stage
     falls back to Python."""
-    p = plan_of(spark, "curation_pipeline")
-    assert "windowspecdefinition(_b" in p
+    p = two_phase_plan(spark, "curation_pipeline")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
@@ -661,11 +720,8 @@ def test_inference_batches_no_global_window(spark):
     """The corpus rank must be two-phase (range-bucketed local windows
     + broadcast offsets) — no unpartitioned single-reducer window, no
     Python."""
-    p = plan_of(spark, "inference_batches_docs")
+    p = two_phase_plan(spark, "inference_batches_docs")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    for frag in p.split("Window")[1:]:
-        head = frag[:250]
-        assert "_b" in head, f"window not partitioned by range bucket: {head}"
 
 
 def test_vocab_coverage_bounded_slice(spark):
@@ -895,11 +951,9 @@ def test_perplexity_buckets_two_phase_no_source_window(spark):
     partitions on (source, score-bin) — never on source alone, which
     would funnel a dominant source through one task — and ntile is
     closed-form off the lifted rank (no ntile operator in the plan)."""
-    p = plan_of(spark, "perplexity_buckets")
+    p = two_phase_plan(spark, "perplexity_buckets", by=("source",))
     assert p.count("Window") == 1
     assert "ntile" not in p
-    seg = p.split("Window")[1][:200]
-    assert "_b" in seg  # local-rank window keyed by the score bin too
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
@@ -1311,26 +1365,19 @@ def test_quality_ensemble_no_global_window_no_python(spark):
     """The ensemble's three corpus ranks run per-BUCKET (every Window
     is partitioned — no single-reducer global sort); fusion joins are
     on doc_id; final cut is a TakeOrdered."""
-    p = plan_of(spark, "quality_ensemble_docs")
+    p = two_phase_plan(spark, "quality_ensemble_docs")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "CartesianProduct" not in p
     assert "TakeOrderedAndProject" in p
-    # every window partitions on the rank bucket, never empty
-    for seg in p.split("Window ")[1:]:
-        head = seg.split("\n")[0]
-        assert "_b#" in head, head
 
 
 def test_concat_chunks_no_global_window_no_python(spark):
     """Concat-chunk packing: the stream-offset prefix sum runs under
     bucket-partitioned windows only (no single-reducer global sort),
     offsets ride as a literal map (no join for them), no Python."""
-    p = plan_of(spark, "concat_chunks_docs")
+    p = two_phase_plan(spark, "concat_chunks_docs")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "CartesianProduct" not in p
-    for seg in p.split("Window ")[1:]:
-        head = seg.split("\n")[0]
-        assert "_b#" in head, head
 
 
 def test_binary_rerank_staged_codes_takeordered(spark):
@@ -1366,13 +1413,10 @@ def test_classifier_eval_two_phase_auc_no_python(spark):
     partitioned by the range bucket — no single-reducer window over
     the distinct-margin table), the model joins broadcast, and the
     only crosses are the three 1-row scalar-metric combines."""
-    p = plan_of(spark, "classifier_eval_audit")
+    p = two_phase_plan(spark, "classifier_eval_audit")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     # (the broadcast-model margin join lives behind the scored
     # localCheckpoint barrier; quality_classifier's pin covers it)
-    for frag in p.split("Window")[1:]:
-        head = frag[:250]
-        assert "_b" in head, f"window not partitioned by range bucket: {head}"
     assert p.count("BroadcastNestedLoopJoin") <= 2  # 1-row x 1-row metric combines
     assert "CartesianProduct" not in p
 
@@ -1559,11 +1603,8 @@ def test_classifier_bias_by_source_one_groupby_no_python(spark):
 def test_classifier_auc_by_source_two_phase_no_python(spark):
     """Every prefix-sum window must partition by (source, bucket); the
     offset lift is a literal map (no offsets join); no Python."""
-    p = plan_of(spark, "classifier_auc_by_source")
+    p = two_phase_plan(spark, "classifier_auc_by_source", by=("_src",))
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    for frag in p.split("Window")[1:]:
-        head = frag[:250]
-        assert "_src" in head and "_b" in head, head
     assert "CartesianProduct" not in p
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tinyetl_spark.functions.hashing import hash64_col, hash64_sql
+from tinyetl_spark.operators.relational import ordered_prefix
 from tinyetl_spark.operators.text import (
     floor_round,
     floor_round_sql,
@@ -317,6 +318,41 @@ def _scored(
     )
 
 
+def _auc_by(scored: DataFrame, by: tuple[str, ...]) -> DataFrame:
+    """(*by, n_pos, n_neg, auc): the exact-integer Mann-Whitney AUC of
+    ``scored``'s margins within each ``by`` group, from per-distinct-
+    margin counts (ties take the average rank): AUC = sum_m[c_pos(m) *
+    (2*cumneg_below(m) + c_neg(m))] / (2*n_pos*n_neg). The
+    cumulative negatives are ``relational.ordered_prefix`` over the
+    margin; the distinct-margin table compresses ties before it."""
+    gm = scored.groupBy(*by, "_mu").agg(
+        F.sum("y").alias("c_pos"),
+        F.sum(F.lit(1) - F.col("y")).alias("c_neg"),
+    )
+    cum, _ = ordered_prefix(gm, "_mu", False, (), "_cn", weight="c_neg", by=by)
+    term = F.col("c_pos").cast("decimal(38,0)") * (F.lit(2) * F.col("_cn") + F.col("c_neg"))
+    return (
+        cum.groupBy(*by)
+        .agg(
+            F.sum("c_pos").cast("bigint").alias("n_pos"),
+            F.sum("c_neg").cast("bigint").alias("n_neg"),
+            F.coalesce(F.sum(term), F.lit(0).cast("decimal(38,0)")).alias("num2"),
+        )
+        .select(
+            *by,
+            "n_pos",
+            "n_neg",
+            floor_round(
+                F.col("num2").cast("double")
+                / F.when(
+                    (F.col("n_pos") == 0) | (F.col("n_neg") == 0), F.lit(None)
+                ).otherwise(2.0 * F.col("n_pos") * F.col("n_neg")),
+                6,
+            ).alias("auc"),
+        )
+    )
+
+
 def classifier_eval_summary(
     df: DataFrame,
     text_col: str = "text",
@@ -335,11 +371,7 @@ def classifier_eval_summary(
     * AUC via the Mann-Whitney rank-sum with average-rank ties, but
       computed from per-distinct-margin counts — never a global rank
       of rows: AUC = sum_m[c_pos(m) * (2*cumneg_below(m) + c_neg(m))]
-      / (2*n_pos*n_neg), every term a bigint. The cumulative-negatives
-      prefix sum over distinct margins runs two-phase (approxQuantile
-      range buckets + a literal cumulative-offset map — the
-      epoch_shuffle pattern), so no single-reducer window touches a
-      table that is worst-case corpus-sized.
+      / (2*n_pos*n_neg), every term a bigint (``_auc_by``).
     * ECE over EVAL_BINS equal-width confidence bins collapses to
       sum_b |U*pos_b - sum_p_b| / (U*n) because the n_b factors cancel
       — per-bin integer sums, one abs, one division.
@@ -348,12 +380,8 @@ def classifier_eval_summary(
 
     Scale shape: margins are one broadcast join + one map-side-combined
     groupBy over the staged feature table; the distinct-margin table
-    compresses ties before any window; driver state is the <=33-row
-    bucket-count collect. Zero Python row evals."""
-    from pyspark.sql import Window
-
-    from tinyetl_spark.operators.text import _offset_map
-
+    compresses ties before any window; driver state is the <=32-row
+    bucket-total collect. Zero Python row evals."""
     scored = scored if scored is not None else _scored(df, text_col, id_col, trained)
     u = F.lit(_U).cast("bigint")
     pred_ok = ((F.col("_mu") > 0).cast("bigint") == F.col("y")).cast("bigint")
@@ -373,47 +401,7 @@ def classifier_eval_summary(
             F.abs(F.col("pos").cast("decimal(38,0)") * _U - F.col("sp"))
         ).alias("ece_num")
     )
-    # AUC: counts per distinct margin, then a two-phase exclusive
-    # prefix sum of negatives in margin order
-    gm = (
-        scored.groupBy("_mu")
-        .agg(
-            F.sum("y").alias("c_pos"),
-            F.sum(F.lit(1) - F.col("y")).alias("c_neg"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    bounds = sorted(set(gm.approxQuantile("_mu", [i / 32 for i in range(1, 32)], 0.001)))
-    mcol = F.col("_mu").cast("double")
-    if bounds:
-        barr = F.array(*[F.lit(float(v)) for v in bounds])
-        bucket = F.size(F.filter(barr, lambda v: mcol > v))
-    else:
-        bucket = F.lit(0)
-    gm = gm.withColumn("_b", bucket)
-    counts = {
-        r["_b"]: r["c"]
-        for r in gm.groupBy("_b").agg(F.sum("c_neg").alias("c")).collect()
-    }
-    offsets, acc = [], 0
-    for bk in range(len(bounds) + 1):
-        offsets.append((bk, acc))
-        acc += counts.get(bk, 0)
-    off_map = _offset_map(offsets)
-    w_local = (
-        Window.partitionBy("_b")
-        .orderBy(F.asc("_mu"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cn = F.element_at(off_map, F.col("_b")) + F.coalesce(
-        F.sum("c_neg").over(w_local), F.lit(0)
-    )
-    aucn = gm.select(
-        (
-            F.col("c_pos").cast("decimal(38,0)")
-            * (F.lit(2) * cn + F.col("c_neg"))
-        ).alias("_t")
-    ).agg(F.coalesce(F.sum("_t"), F.lit(0).cast("decimal(38,0)")).alias("num2"))
+    aucn = _auc_by(scored, ()).select("auc")
     un = float(_U)
     return (
         base.crossJoin(ece)
@@ -425,13 +413,7 @@ def classifier_eval_summary(
             floor_round(F.col("correct").cast("double") / F.col("n"), 6).alias(
                 "accuracy"
             ),
-            floor_round(
-                F.col("num2").cast("double")
-                / F.when(
-                    (F.col("n_pos") == 0) | (F.col("n_neg") == 0), F.lit(None)
-                ).otherwise(2.0 * F.col("n_pos") * F.col("n_neg")),
-                6,
-            ).alias("auc"),
+            F.col("auc"),
             floor_round(
                 F.col("brier_num").cast("double") / (F.lit(un * un) * F.col("n")), 6
             ).alias("brier"),
@@ -763,87 +745,15 @@ def classifier_auc_by_source(
     per-source AUC says whether the model can even RANK that domain's
     documents (an AUC near 0.5 on one source means the filter is a
     coin flip there however the threshold moves). Same exact-integer
-    Mann-Whitney rank-sum as the global audit, but the per-distinct-
-    margin count table is keyed by (source, margin) and the
-    cumulative-negatives prefix sum runs two-phase WITHIN each source:
-    global margin-quantile buckets partition every window as
-    (source, bucket), and a |sources| x |buckets| literal offset map
-    (driver-side, bounded) lifts local sums — no per-source
-    single-reducer window over a worst-case corpus/|sources|-sized
-    partition."""
-    from pyspark.sql import Window
-
+    Mann-Whitney rank-sum as the global audit (``_auc_by``), its
+    prefix-sum windows partitioned by (source, bucket)."""
     scored = scored if scored is not None else _scored(df, text_col, id_col, trained)
     src = df.select(F.col(id_col), F.col(source_col).alias("_src"))
-    base = scored.join(src, id_col)
-    gm = (
-        base.groupBy("_src", "_mu")
-        .agg(
-            F.sum("y").alias("c_pos"),
-            F.sum(F.lit(1) - F.col("y")).alias("c_neg"),
-        )
-        .localCheckpoint(eager=False)
+    return (
+        _auc_by(scored.join(src, id_col), ("_src",))
+        .withColumnRenamed("_src", source_col)
+        .orderBy(source_col)
     )
-    bounds = sorted(
-        set(gm.approxQuantile("_mu", [i / 32 for i in range(1, 32)], 0.001))
-    )
-    mcol = F.col("_mu").cast("double")
-    if bounds:
-        barr = F.array(*[F.lit(float(v)) for v in bounds])
-        bucket = F.size(F.filter(barr, lambda v: mcol > v))
-    else:
-        bucket = F.lit(0)
-    gm = gm.withColumn("_b", bucket)
-    counts = {
-        (r["_src"], r["_b"]): r["c"]
-        for r in gm.groupBy("_src", "_b").agg(F.sum("c_neg").alias("c")).collect()
-    }
-    srcs = sorted({s for s, _ in counts})
-    flat = []
-    for s in srcs:
-        acc = 0
-        for bk in range(len(bounds) + 1):
-            flat.append(F.lit(f"{s}#{bk}"))
-            flat.append(F.lit(int(acc)))
-            acc += counts.get((s, bk), 0)
-    off_map = F.create_map(*flat) if flat else F.create_map(F.lit("x"), F.lit(0))
-    w_local = (
-        Window.partitionBy("_src", "_b")
-        .orderBy(F.asc("_mu"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cn = F.element_at(
-        off_map, F.concat_ws("#", F.col("_src"), F.col("_b").cast("string"))
-    ) + F.coalesce(F.sum("c_neg").over(w_local), F.lit(0))
-    per_src = (
-        gm.select(
-            "_src",
-            "c_pos",
-            "c_neg",
-            (
-                F.col("c_pos").cast("decimal(38,0)")
-                * (F.lit(2) * cn + F.col("c_neg"))
-            ).alias("_t"),
-        )
-        .groupBy("_src")
-        .agg(
-            F.sum("c_pos").alias("n_pos"),
-            F.sum("c_neg").alias("n_neg"),
-            F.coalesce(F.sum("_t"), F.lit(0).cast("decimal(38,0)")).alias("num2"),
-        )
-    )
-    return per_src.select(
-        F.col("_src").alias(source_col),
-        F.col("n_pos").cast("bigint").alias("n_pos"),
-        F.col("n_neg").cast("bigint").alias("n_neg"),
-        floor_round(
-            F.col("num2").cast("double")
-            / F.when(
-                (F.col("n_pos") == 0) | (F.col("n_neg") == 0), F.lit(None)
-            ).otherwise(2.0 * F.col("n_pos") * F.col("n_neg")),
-            6,
-        ).alias("auc"),
-    ).orderBy(source_col)
 
 
 def classifier_auc_by_source_sql(

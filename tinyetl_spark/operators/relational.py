@@ -1,5 +1,6 @@
 """Relational operators Spark lacks as single primitives: as-of join,
-range (interval) self-join, and sessionization. Each is a composition
+range (interval) self-join, sessionization and the ordered prefix
+sum (exact global ranks and running sums). Each is a composition
 of built-in DataFrame ops (window functions / inequality joins) — no
 UDFs, no custom physical operators.
 
@@ -13,11 +14,17 @@ Scale notes:
   into a banded equi-join (shuffle on key+bucket, AQE handles skew).
 * ``sessionize`` is the classic gap-and-islands: lag + cumulative sum
   over (key, ts) windows — two narrow window passes over one shuffle.
+* ``ordered_prefix`` ranks or prefix-sums over a total order in two
+  phases: range buckets compute local sums in parallel, and a literal
+  map of bucket offsets lifts them to global ones — never a window
+  that sends the whole input through one reducer.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -232,6 +239,114 @@ def sessionize(
         F.date_format(F.min(ts), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format(F.max(ts), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
     )
+
+
+PREFIX_BUCKETS = 32  # range buckets of ordered_prefix's quantile cut
+
+
+def _sql_literal(v, sql_type: str) -> str:
+    """``v`` as a SQL literal of ``sql_type`` (a string cast, quoted with
+    backslash escapes as Spark's parser reads them)."""
+    if v is None:
+        return f"CAST(NULL AS {sql_type})"
+    quoted = str(v).replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{quoted}' AS {sql_type})"
+
+
+def literal_lookup(values: dict[tuple, int], frame: DataFrame, cols: Sequence[str]) -> Column:
+    """The value ``values`` holds for the row's ``cols``, read from a
+    literal map (a projection, never a join). The map is keyed by
+    ``_b`` alone or by ``struct(*cols)``: a partition column may be
+    NULL, and a NULL map key is an error, but a struct holding a NULL
+    is an ordinary key. The map is one parsed SQL expression, so it
+    costs one driver round trip however many entries it holds. Empty
+    ``values`` reads 0."""
+    if not values:
+        return F.lit(0).cast("bigint")
+    if list(cols) == ["_b"]:
+        keys, row_key = [str(int(k[0])) for k in values], F.col("_b")
+    else:
+        types = [frame.schema[c].dataType.simpleString() for c in cols]
+        keys = [
+            "named_struct("
+            + ", ".join(f"'{c}', {_sql_literal(v, t)}" for c, v, t in zip(cols, k, types))
+            + ")"
+            for k in values
+        ]
+        row_key = F.struct(*cols)
+    entries = ", ".join(f"{k}, {int(v)}L" for k, v in zip(keys, values.values()))
+    return F.element_at(F.expr(f"map({entries})"), row_key)
+
+
+def ordered_prefix(
+    df: DataFrame,
+    key: str,
+    descending: bool,
+    tiebreak: Sequence[str],
+    out: str,
+    weight: str | None = None,
+    by: Sequence[str] = (),
+    bucket: Column | None = None,
+) -> tuple[DataFrame, dict[tuple, int]]:
+    """Exclusive prefix sum of ``weight`` over the order ``key``
+    (``descending`` or not), then ``tiebreak`` ascending, within each
+    ``by`` partition: ``out`` is the sum over the rows strictly before
+    this one. A ``weight`` of None counts rows, so ``out + 1`` is the
+    rank. Returns ``(df + out, totals)``, ``totals`` mapping each
+    ``by`` tuple to its partition's total weight.
+
+    A plain window over that order sends each partition through one
+    reducer, so the sum runs in two phases. ``PREFIX_BUCKETS`` range
+    buckets ``_b`` cut the numeric ``key`` at ``approxQuantile`` bounds
+    (``bucket`` replaces them with a given Column that rises with the
+    order, for a key that cannot be quantiled). Equal keys always share
+    a bucket and bucket numbers rise in walk order, so the bounds
+    affect only load balance, never the values. A window partitioned
+    by ``(*by, _b)`` sums each bucket locally in parallel; one collect
+    of the per-``(*by, _b)`` totals gives the driver each bucket's
+    offset, and a literal offset map adds it back.
+
+    The offsets are a literal map (a projection), never a joined
+    offsets table: with the bucket expression in lineage,
+    InferFiltersFromConstraints copies the join equality as
+    ``<bucket expr> <=> _b`` onto the offsets side, where the bucket
+    expression's inputs do not exist, and execution dies with
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (checkpoint barriers do not
+    help; LogicalRDD deliberately preserves constraints).
+
+    The input is checkpointed (lazily) once: it feeds the quantile
+    job, the totals job and the returned plan."""
+    base = df.localCheckpoint(eager=False)
+    if bucket is None:
+        qs = [i / PREFIX_BUCKETS for i in range(1, PREFIX_BUCKETS)]
+        bounds = sorted(set(base.approxQuantile(key, qs, 0.001)))
+        v = F.col(key).cast("double")
+        above = F.size(F.filter(F.array(*[F.lit(float(b)) for b in bounds]), lambda b: v > b))
+        if not bounds:
+            bucket = F.lit(0)
+        elif descending:
+            # NULL keys land last in a descending walk and first in an
+            # ascending one, where Spark orders them
+            bucket = F.lit(len(bounds)) - above
+        else:
+            bucket = above
+    keyed = base.withColumn("_b", bucket)
+    wt = F.lit(1) if weight is None else F.col(weight)
+    order = [F.desc(key) if descending else F.asc(key), *[F.asc(c) for c in tiebreak]]
+    w = (
+        Window.partitionBy(*by, "_b")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cols = (*by, "_b")
+    offsets, totals = {}, {}
+    rows = keyed.groupBy(*cols).agg(F.sum(wt).alias("_t")).collect()
+    for r in sorted(rows, key=lambda r: r["_b"]):
+        part = tuple(r[c] for c in by)
+        offsets[(*part, r["_b"])] = totals.get(part, 0)
+        totals[part] = totals.get(part, 0) + int(r["_t"] or 0)
+    before = literal_lookup(offsets, keyed, cols) + F.coalesce(F.sum(wt).over(w), F.lit(0))
+    return keyed.select(*base.columns, before.alias(out)), totals
 
 
 def profile_table(df: DataFrame) -> DataFrame:

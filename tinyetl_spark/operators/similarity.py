@@ -1544,11 +1544,12 @@ def ivf_pq_topk_sql(
 class RecallTier(NamedTuple):
     """One ANN tier of the recall audit.
 
-    ``topk`` is the per-probe Spark top-k ``(df, q, k, q_vec, enc)``:
-    ann_recall prefetches the probe vectors with ONE collect and reads
-    (or builds once) the tier's code table, so an N-probe recall query
-    costs one encode subtree + N cheap scan branches. It is None for
-    the residual-PQ tiers, which ann_recall always batches.
+    ``topk`` is the per-probe Spark top-k ``(df, q, k, q_vec, enc)`` of
+    an IVF tier: ann_recall prefetches the probe vectors with ONE
+    collect and reads (or builds once) the cell index, so an N-probe
+    recall query costs one index subtree + N cheap scan branches. Only
+    the IVF tiers use it; it is None for every tier in
+    ``_BATCHED_RECALL_TIERS``, which ann_recall always batches.
     ``topk_sql`` ``(table, q, k)`` is the DuckDB twin. ``family`` names
     the staged index a non-PQ tier reads. ``stages`` is a residual-PQ
     tier's stage count (0 otherwise) and ``shortlist`` the exact-rerank
@@ -1575,14 +1576,8 @@ def _rpq_tier(n: int, shortlist: int | None = None) -> RecallTier:
 # Each ANN tier's fitness claim is its RECALL against exact search, not
 # just that it returns k deterministic rows.
 RECALL_TIERS: dict[str, RecallTier] = {
-    "lsh": RecallTier(
-        lambda df, q, k, qv, enc: ann_topk(df, q, k),
-        lambda table, q, k: ann_topk_sql(table, q, k),
-    ),
-    "multiprobe": RecallTier(
-        lambda df, q, k, qv, enc: ann_multiprobe_topk(df, q, k),
-        lambda table, q, k: ann_multiprobe_topk_sql(table, q, k),
-    ),
+    "lsh": RecallTier(None, ann_topk_sql),
+    "multiprobe": RecallTier(None, ann_multiprobe_topk_sql),
     "ivf": RecallTier(
         lambda df, q, k, qv, enc: ivf_topk(df, q, k, q_vec=qv, index_df=enc),
         lambda table, q, k: ivf_topk_sql(table, q, k),
@@ -2760,11 +2755,11 @@ def binary_rerank_topk_sql(
 
 
 # register the binary tier with the shared recall-audit machinery
-# (dict filled here so the tier functions above are already defined;
-# queries.py iterates RECALL_TIERS after full module import)
+# (added here, after BINARY_SHORTLIST; queries.py iterates
+# RECALL_TIERS after full module import)
 RECALL_TIERS["binary_rerank"] = RecallTier(
-    lambda df, q, k, qv, enc: binary_rerank_topk(df, q, k, q_vec=qv, enc=enc),
-    lambda table, q, k: binary_rerank_topk_sql(table, q, k),
+    None,
+    binary_rerank_topk_sql,
     "binary",
     shortlist=BINARY_SHORTLIST,
 )

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tinyetl_spark.functions.hashing import hash64_col, hash64_sql, hash128_col, hash128_sql
+from tinyetl_spark.operators.relational import ordered_prefix
 
 # Tiny per-language marker lexicons for the n-gram/stopword language-ID
 # heuristic. Deterministic and SQL-expressible in both engines.
@@ -1154,23 +1155,6 @@ def char_entropy_sql(
 # ------------------------------------------------- training-run prep
 
 
-def _offset_map(offsets: list[tuple[int, int]]) -> Column:
-    """A |buckets|-sized literal map from bucket id to cumulative
-    offset. Every two-phase rank/prefix-sum in this module lifts local
-    values to global through THIS (a projection), never through a
-    joined offsets table: with the bucket expression in lineage,
-    InferFiltersFromConstraints copies the join equality as
-    `<bucket expr> <=> _b` onto the offsets side — where the bucket
-    expression's inputs do not exist — and execution dies with
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (checkpoint barriers don't
-    help; LogicalRDD deliberately preserves constraints)."""
-    flat = []
-    for bk, off in offsets:
-        flat.append(F.lit(int(bk)))
-        flat.append(F.lit(int(off)))
-    return F.create_map(*flat)
-
-
 def epoch_shuffle(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1184,47 +1168,19 @@ def epoch_shuffle(
     restarts (unlike ``orderBy(rand())``), and (b) re-keyable per epoch
     by bumping ``seed``.
 
-    A naive ``row_number() OVER (ORDER BY key)`` funnels the whole
-    corpus through ONE window task, so the rank is computed two-phase:
-    the first hex chars of the key split the corpus into ``buckets``
-    uniform buckets (hex order == lexicographic key order, so bucket
-    boundaries respect the total order), each bucket ranks locally in
-    parallel, and a ``buckets``-row cumulative-offset table — driver
-    arithmetic, then broadcast — lifts local ranks to global ones.
-    One shuffle on the bucket; no single-reducer stage anywhere.
+    The rank is ``relational.ordered_prefix`` over the key, bucketed by
+    the key's first hex chars (hex order is key order, so ``buckets``
+    uniform buckets with no quantile job).
+
     Emits (id, *carry, shuffle_rank) — ``carry`` columns ride the rank
     shuffle in-row so a consumer that needs them (curation_pipeline)
     does not pay a corpus-sized join to re-attach them (guide §2.4)."""
-    from pyspark.sql import Window
-
     hex_chars = max(1, ((buckets - 1).bit_length() + 3) // 4)  # ceil: >= buckets
-    n_buckets = 16 ** hex_chars
     key = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
-    # cut lineage: the bucket-count job below and the returned plan
-    # would otherwise BOTH recompute the md5 keying scan
-    keyed = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        key.alias("_key"),
-        F.conv(F.substring(key, 1, hex_chars), 16, 10).cast("int").alias("_b"),
-    ).localCheckpoint(eager=False)
-    w_local = Window.partitionBy("_b").orderBy(F.col("_key").asc(), F.col(id_col).asc())
-    local = keyed.withColumn("_r", F.row_number().over(w_local))
-    # n_buckets rows: trivially driver-sized at any corpus scale —
-    # counts need only the bucket column, never the rank window
-    counts = {r["_b"]: r["c"] for r in keyed.groupBy("_b").agg(F.count("*").alias("c")).collect()}
-    offsets, acc = [], 0
-    for b in range(n_buckets):
-        offsets.append((b, acc))
-        acc += counts.get(b, 0)
-    off_map = _offset_map(offsets)
-    return local.select(
-        id_col,
-        *carry,
-        (F.element_at(off_map, F.col("_b")) + F.col("_r"))
-        .cast("bigint")
-        .alias("shuffle_rank"),
-    )
+    keyed = df.select(F.col(id_col), *[F.col(c) for c in carry], key.alias("_key"))
+    hex_bucket = F.conv(F.substring("_key", 1, hex_chars), 16, 10).cast("int")
+    ranked, _ = ordered_prefix(keyed, "_key", False, (id_col,), "_r", bucket=hex_bucket)
+    return ranked.select(id_col, *carry, (F.col("_r") + 1).alias("shuffle_rank"))
 
 
 def epoch_shuffle_sql(
@@ -1251,52 +1207,15 @@ def pack_sequences(
     ~capacity-token training rows (docs longer than a window span
     several; the consumer splits those at window edges).
 
-    Like epoch_shuffle's rank, the running total is computed two-phase
-    rather than through one unpartitioned (single-reducer) window:
-    approxQuantile boundaries on ``id`` split the corpus into ordered
-    range buckets (manual range partitioning — the same sampling
-    Spark's own RangePartitioner does), each bucket computes its local
-    unbounded-preceding sum in parallel, and a bucket-total
-    cumulative-offset table (driver arithmetic over ≤ ``buckets`` rows,
-    then broadcast) lifts local prefix sums to global ones. One shuffle
-    on the bucket. Emits (id, n_tokens, pack_id)."""
-    from pyspark.sql import Window
-
-    buckets = 32
+    The running total is ``relational.ordered_prefix`` over ``id``.
+    Emits (id, n_tokens, pack_id)."""
     toks = F.size(words_col(text_col)).cast("bigint")
-    # cut lineage FIRST: tokenization feeds the quantile job, the totals
-    # job, and the returned plan — pay it once
-    base = df.select(F.col(id_col), toks.alias("n_tokens")).localCheckpoint(eager=False)
-    qs = [i / buckets for i in range(1, buckets)]
-    bounds = sorted(set(base.approxQuantile(id_col, qs, 0.001)))
-    if bounds:
-        barr = F.array(*[F.lit(float(b)) for b in bounds])
-        bucket = F.size(F.filter(barr, lambda b: F.col(id_col).cast("double") > b))
-    else:
-        bucket = F.lit(0)
-    keyed = base.withColumn("_b", bucket)
-    w_local = (
-        Window.partitionBy("_b").orderBy(id_col).rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local_before = F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    totals = {
-        r["_b"]: r["t"]
-        for r in keyed.groupBy("_b").agg(F.sum("n_tokens").alias("t")).collect()
-    }
-    offsets, acc = [], 0
-    for b in range(len(bounds) + 1):
-        offsets.append((b, acc))
-        acc += totals.get(b, 0)
-    off_map = _offset_map(offsets)
-    return keyed.withColumn("_lb", local_before).select(
+    base = df.select(F.col(id_col), toks.alias("n_tokens"))
+    before, _ = ordered_prefix(base, id_col, False, (), "_lb", weight="n_tokens")
+    return before.select(
         id_col,
         "n_tokens",
-        F.floor(
-            (F.element_at(off_map, F.col("_b")) + F.col("_lb"))
-            / capacity_tokens
-        )
-        .cast("bigint")
-        .alias("pack_id"),
+        F.floor(F.col("_lb") / capacity_tokens).cast("bigint").alias("pack_id"),
     )
 
 
@@ -3112,52 +3031,12 @@ def quality_budget_select(
     within the budget — the 'train on the best N tokens' selection step
     (cf. DataComp / QuRating-style quality-ordered curation).
 
-    The cumulative token count over the quality ordering is computed
-    two-phase like pack_sequences: approxQuantile boundaries on the
-    quality score split the corpus into ordered range buckets, each
-    bucket prefix-sums locally in parallel, and a driver-built
-    cumulative-offset table (<= buckets rows, broadcast) lifts local
-    sums to global — no single-reducer window. Emits the selected
-    (id, n_words, quality)."""
-    from pyspark.sql import Window
-
-    buckets = 32
-    base = (
-        quality_score(df, text_col, id_col)
-        .select(id_col, "n_words", "quality")
-        .localCheckpoint(eager=False)  # feeds quantile job, totals job, and the plan
-    )
-    qs = [i / buckets for i in range(1, buckets)]
-    bounds = sorted(set(base.approxQuantile("quality", qs, 0.001)))
-    if bounds:
-        barr = F.array(*[F.lit(float(v)) for v in bounds])
-        # descending walk: bucket 0 = highest quality ⇒ count bounds >= q
-        bucket = F.size(F.filter(barr, lambda v: F.col("quality").cast("double") <= v))
-    else:
-        bucket = F.lit(0)
-    keyed = base.withColumn("_b", bucket)
-    w_local = (
-        Window.partitionBy("_b")
-        .orderBy(F.desc("quality"), F.asc(id_col))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local_before = F.coalesce(F.sum("n_words").over(w_local), F.lit(0))
-    totals = {
-        r["_b"]: r["t"]
-        for r in keyed.groupBy("_b").agg(F.sum("n_words").alias("t")).collect()
-    }
-    # bucket index counts bounds >= q, so bucket 0 holds the HIGHEST
-    # quality — accumulate offsets in ascending bucket order
-    offsets, acc = [], 0
-    for bk in range(len(bounds) + 1):
-        offsets.append((bk, acc))
-        acc += totals.get(bk, 0)
-    off_map = _offset_map(offsets)
-    return (
-        keyed.withColumn("_lb", local_before)
-        .filter((F.element_at(off_map, F.col("_b")) + F.col("_lb")) < budget_tokens)
-        .select(id_col, "n_words", "quality")
-    )
+    The cumulative token count over the quality ordering is
+    ``relational.ordered_prefix``. Emits the selected (id, n_words,
+    quality)."""
+    base = quality_score(df, text_col, id_col).select(id_col, "n_words", "quality")
+    before, _ = ordered_prefix(base, "quality", True, (id_col,), "_cb", weight="n_words")
+    return before.filter(F.col("_cb") < budget_tokens).select(id_col, "n_words", "quality")
 
 
 def quality_budget_select_sql(
@@ -3484,44 +3363,13 @@ def inference_batches(
     so padding-to-max waste stays low; the output is the plan an
     inference scheduler consumes.
 
-    The global rank is two-phase like quality_budget_select:
-    approxQuantile range buckets rank locally in parallel, a broadcast
-    offset table lifts local ranks to global — no single-reducer
-    window over the corpus. The per-batch aggregation reuses the same
-    keyed shuffle."""
-    from pyspark.sql import Window
-
-    buckets = 32
-    base = (
-        df.select(
-            F.col(id_col), F.size(words_col(text_col)).cast("bigint").alias("n_tokens")
-        )
-        .localCheckpoint(eager=False)
+    The global rank is ``relational.ordered_prefix``; the per-batch
+    aggregation reuses its keyed shuffle."""
+    base = df.select(
+        F.col(id_col), F.size(words_col(text_col)).cast("bigint").alias("n_tokens")
     )
-    qs = [i / buckets for i in range(1, buckets)]
-    bounds = sorted(set(base.approxQuantile("n_tokens", qs, 0.001)))
-    if bounds:
-        barr = F.array(*[F.lit(float(v)) for v in bounds])
-        bucket = F.size(
-            F.filter(barr, lambda v: F.col("n_tokens").cast("double") <= v)
-        )
-    else:
-        bucket = F.lit(0)
-    keyed = base.withColumn("_b", bucket)
-    w_local = Window.partitionBy("_b").orderBy(F.desc("n_tokens"), F.asc(id_col))
-    counts = {
-        r["_b"]: r["c"]
-        for r in keyed.groupBy("_b").agg(F.count("*").alias("c")).collect()
-    }
-    offsets, acc = [], 0
-    for bk in range(len(bounds) + 1):
-        offsets.append((bk, acc))
-        acc += counts.get(bk, 0)
-    off_map = _offset_map(offsets)
-    ranked = keyed.withColumn("_lr", F.row_number().over(w_local))
-    batch = F.floor(
-        (F.element_at(off_map, F.col("_b")) + F.col("_lr") - 1) / batch_size
-    ).cast("bigint")
+    ranked, _ = ordered_prefix(base, "n_tokens", True, (id_col,), "_r")
+    batch = F.floor(F.col("_r") / batch_size).cast("bigint")
     return (
         ranked.select(F.col("n_tokens"), batch.alias("batch_id"))
         .groupBy("batch_id")
@@ -4499,60 +4347,6 @@ def rm3_expand_search_sql(
 QENS_K = 200  # documents reported by the ensemble query
 
 
-def _two_phase_rank(
-    base: DataFrame,
-    value_col: str,
-    id_col: str,
-    rank_name: str,
-    ascending: bool = False,
-    buckets: int = 32,
-) -> DataFrame:
-    """Exact global rank of ``value_col`` (ties broken by id asc)
-    without a single-reducer window — the inference_batches /
-    quality_budget_select pattern factored out: approxQuantile range
-    buckets rank locally in parallel, a |buckets|-sized literal
-    cumulative-offset MAP lifts local ranks to global (a projection,
-    no join — see the constraint-bug note below). The approximate
-    boundaries affect only load balance, never the rank values.
-    Returns (id_col, rank_name)."""
-    from pyspark.sql import Window
-
-    keyed = base.select(id_col, value_col).localCheckpoint(eager=False)
-    qs = [i / buckets for i in range(1, buckets)]
-    bounds = sorted(set(keyed.approxQuantile(value_col, qs, 0.001)))
-    vcol = F.col(value_col).cast("double")
-    if bounds:
-        barr = F.array(*[F.lit(float(v)) for v in bounds])
-        # bucket 0 holds the smallest values; ascending ranks walk
-        # buckets upward, descending ranks walk them downward
-        bucket = F.size(F.filter(barr, lambda v: vcol > v))
-    else:
-        bucket = F.lit(0)
-    keyed = keyed.withColumn("_b", bucket)
-    order = [
-        F.asc(value_col) if ascending else F.desc(value_col),
-        F.asc(id_col),
-    ]
-    w_local = Window.partitionBy("_b").orderBy(*order)
-    counts = {
-        r["_b"]: r["c"]
-        for r in keyed.groupBy("_b").agg(F.count("*").alias("c")).collect()
-    }
-    n_b = len(bounds) + 1
-    walk = range(n_b) if ascending else range(n_b - 1, -1, -1)
-    offsets, acc = [], 0
-    for bk in walk:
-        offsets.append((bk, acc))
-        acc += counts.get(bk, 0)
-    off_map = _offset_map(offsets)  # literal map, never a join — see its docstring
-    return keyed.withColumn("_lr", F.row_number().over(w_local)).select(
-        F.col(id_col),
-        (F.element_at(off_map, F.col("_b")) + F.col("_lr"))
-        .cast("bigint")
-        .alias(rank_name),
-    )
-
-
 def quality_ensemble(
     df: DataFrame,
     k: int = QENS_K,
@@ -4566,9 +4360,8 @@ def quality_ensemble(
     logprob — the CCNet perplexity stand-in), (3) repetition, i.e.
     Gopher's duplicate-3-gram fraction ranked ASCENDING (less
     templated = better). Each signal ranks the corpus exactly (ties by
-    id) via the two-phase bucket rank — no single-reducer window —
-    and rrf = Σ 1/(60 + rank) fuses them on integer ranks, so the
-    fused score is bit-identical across engines however each raw
+    id) through ``relational.ordered_prefix``, and rrf = Σ 1/(60 +
+    rank) fuses them on integer ranks, so the fused score is bit-identical across engines however each raw
     signal's doubles round (the hybrid_search_docs trick, applied
     corpus-wide). Docs shorter than 3 words carry no repetition signal
     and are excluded (inner join), matching the SQL twin. Top-k by
@@ -4577,12 +4370,16 @@ def quality_ensemble(
     lm = unigram_logprob(df, text_col, id_col).select(id_col, "avg_logprob")
     rep = dup_ngram_frac(df, text_col, id_col).select(id_col, "dup_gram_frac")
     base = q.join(lm, id_col).join(rep, id_col).localCheckpoint(eager=False)
-    r1 = _two_phase_rank(base, "quality", id_col, "r_quality")
-    r2 = _two_phase_rank(base, "avg_logprob", id_col, "r_fluency")
-    r3 = _two_phase_rank(
-        base, "dup_gram_frac", id_col, "r_repetition", ascending=True
+
+    def rank(col: str, descending: bool, name: str) -> DataFrame:
+        ranked, _ = ordered_prefix(base.select(id_col, col), col, descending, (id_col,), "_r")
+        return ranked.select(id_col, (F.col("_r") + 1).alias(name))
+
+    fused = (
+        rank("quality", True, "r_quality")
+        .join(rank("avg_logprob", True, "r_fluency"), id_col)
+        .join(rank("dup_gram_frac", False, "r_repetition"), id_col)
     )
-    fused = r1.join(r2, id_col).join(r3, id_col)
     rrf = (
         F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("r_quality").cast("double"))
         + F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("r_fluency").cast("double"))
@@ -4647,7 +4444,6 @@ def concat_chunks(
     id_col: str = "doc_id",
     capacity: int = CHUNK_CAPACITY,
     seed: int = 0,
-    buckets: int = 256,
 ) -> DataFrame:
     """GPT-style concat-and-chunk packing: concatenate the epoch's
     token stream in epoch-shuffle order and cut it into fixed
@@ -4657,18 +4453,12 @@ def concat_chunks(
     Per chunk: n_docs touching it, its token count (== capacity except
     the last), and the first/last doc in stream order.
 
-    Shape at scale: the md5 epoch order comes from epoch_shuffle's
-    two-phase rank; the exclusive prefix-sum of token counts runs
-    two-phase as well — ranks are DENSE 1..N, so uniform rank ranges
-    bucket the corpus with no quantile pass, each bucket cumsums
-    locally under one partitioned window, and a |buckets|-sized
-    literal offset MAP (not a join — the _two_phase_rank constraint
-    lesson) lifts local sums to global stream offsets. A doc spanning
-    k chunks explodes to k rows (k <= n_tokens/capacity + 1), so the
-    fan-out is ~total_tokens/capacity — the output's own size. Empty
-    docs carry no tokens and are excluded from the stream."""
-    from pyspark.sql import Window
-
+    Shape at scale: the md5 epoch order comes from epoch_shuffle, and
+    the exclusive prefix sum of token counts over it is
+    ``relational.ordered_prefix``. A doc spanning k chunks explodes to
+    k rows (k <= n_tokens/capacity + 1), so the fan-out is
+    ~total_tokens/capacity — the output's own size. Empty docs carry
+    no tokens and are excluded from the stream."""
     ranks = epoch_shuffle(df, id_col, seed)
     toks = df.select(
         F.col(id_col),
@@ -4676,31 +4466,8 @@ def concat_chunks(
         .cast("bigint")
         .alias("_nt"),
     ).filter(F.col("_nt") > 0)
-    base = ranks.join(toks, id_col)
-    n = base.count()
-    bsize = max(1, -(-n // buckets))  # ceil
-    keyed = base.withColumn(
-        "_b", ((F.col("shuffle_rank") - 1) / F.lit(bsize)).cast("int")
-    )
-    w = (
-        Window.partitionBy("_b")
-        .orderBy("shuffle_rank")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local_cum = (F.sum("_nt").over(w) - F.col("_nt")).alias("_lc")
-    btots = {
-        r["_b"]: int(r["t"])
-        for r in keyed.groupBy("_b").agg(F.sum("_nt").alias("t")).collect()
-    }
-    offsets, acc = [], 0
-    for bk in range(max(btots) + 1 if btots else 1):
-        offsets.append((bk, acc))
-        acc += btots.get(bk, 0)
-    off_map = _offset_map(offsets)
-    staged = keyed.select(
-        F.col(id_col),
-        F.col("_nt"),
-        (F.element_at(off_map, F.col("_b")) + local_cum).alias("_off"),
+    staged, _ = ordered_prefix(
+        ranks.join(toks, id_col), "shuffle_rank", False, (), "_off", weight="_nt"
     )
     first_c = F.floor(F.col("_off") / capacity)
     last_c = F.floor((F.col("_off") + F.col("_nt") - 1) / capacity)

@@ -2763,8 +2763,8 @@ def zipf_slope_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget data selection: keep the highest-quality documents
     whose cumulative token count starts within the budget. The global
-    quality-ordered prefix sum runs two-phase (quantile range buckets +
-    broadcast offset table) — no single-reducer window."""
+    quality-ordered prefix sum is ``relational.ordered_prefix`` — no
+    single-reducer window."""
     return text.quality_budget_select(load(spark, sf_dir, "documents"))
 
 
@@ -4027,7 +4027,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("inference_batches_docs", text.inference_batches_sql())
 def inference_batches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed inference batching: rank docs by token count
-    (two-phase, no single-reducer window), cut into 32-doc batches,
+    (``relational.ordered_prefix``), cut into 32-doc batches,
     report per-batch padding waste — the schedule an inference/scoring
     run consumes."""
     return text.inference_batches(load(spark, sf_dir, "documents"))
@@ -4210,9 +4210,8 @@ def classifier_eval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads before trusting a filter model at crawl scale. Every metric
     is exact-integer until one final division (micro-unit confidences,
     0/1 labels), so the iterative-float model has a hash-matching
-    DuckDB twin; the AUC prefix sum over distinct margins runs
-    two-phase (range buckets + literal offset map), never through a
-    single-reducer window."""
+    DuckDB twin; the AUC prefix sum over distinct margins is
+    ``relational.ordered_prefix``, never a single-reducer window."""
     return classifier.classifier_eval_summary(
         load(spark, sf_dir, "documents"),
         trained=_trained_classifier(spark, sf_dir),
@@ -4253,9 +4252,8 @@ def classifier_auc_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC-AUC per source — the discriminative half of the filter-bias
     audit (keep_rate says how much of a domain drops; per-source AUC
     says whether the model can even rank it). Same exact-integer
-    rank-sum as the global audit, prefix sums two-phase WITHIN each
-    source via (source, bucket) windows + a bounded literal offset
-    map."""
+    rank-sum as the global audit, its prefix sums
+    ``relational.ordered_prefix`` partitioned by source."""
     return classifier.classifier_auc_by_source(
         load(spark, sf_dir, "documents"),
         trained=_trained_classifier(spark, sf_dir),
@@ -4288,9 +4286,8 @@ def concat_chunks_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5 epoch-shuffle order) cut into fixed 512-token chunks with
     documents crossing boundaries — the decoder-pretraining packing;
     pack_sequences_docs remains the no-split SFT alternative. Per
-    chunk: docs touching it, token count, first/last doc. Exclusive
-    prefix sums run two-phase over dense rank buckets with a literal
-    offset map — no global window, no offsets join."""
+    chunk: docs touching it, token count, first/last doc. The stream
+    offsets are ``relational.ordered_prefix`` over the shuffle rank."""
     return text.concat_chunks(load(spark, sf_dir, "documents"))
 
 
@@ -4300,7 +4297,7 @@ def quality_ensemble_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent quality signals (heuristic composite, unigram-LM
     fluency, duplicate-3-gram repetition ranked ascending) — the
     FineWeb-style ensemble-filter shape. Each signal ranks the corpus
-    exactly via the two-phase bucket rank (no single-reducer window);
+    exactly through ``relational.ordered_prefix``;
     fusion is 1/(60+rank) on integer ranks, bit-identical across
     engines; top 200 by fused score."""
     return text.quality_ensemble(load(spark, sf_dir, "documents"))
@@ -5467,16 +5464,12 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     A naive ``ntile() OVER (PARTITION BY source)`` funnels each
     source's whole slice through ONE window task — the straggler mode
     at web scale, where a dominant source is most of the corpus. The
-    per-source rank is therefore computed two-phase (the
-    epoch_shuffle / quality_budget pattern): per-source
-    percentile_approx boundaries split each source into ordered score
-    bins (boundary VALUES only affect balance — equal scores always
-    share a bin, so correctness never depends on the approximation),
-    bins rank locally in parallel, and a driver-built offset table
-    (sources x bins rows) lifts local ranks to per-source global ones;
-    ntile(3) is then the closed-form floor((rank-1)*3/n)+1. Tiling
+    per-source rank is therefore ``relational.ordered_prefix`` with
+    ``by=("source",)``, and ntile(3) is the closed form
+    floor((rank-1)*3/n)+1 off the per-source totals it returns. Tiling
     stays deterministic (score desc, doc_id asc); per-bucket means sum
     exact decimals so the report hashes identically."""
+    from tinyetl_spark.operators.relational import literal_lookup, ordered_prefix
     from tinyetl_spark.operators.text import floor_round
 
     docs = load(spark, sf_dir, "documents")
@@ -5484,70 +5477,16 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         text.unigram_logprob(docs, top_vocab=16)
         .join(docs.select("doc_id", "source"), "doc_id")
         .select("doc_id", "source", "avg_logprob", "n_words")
-        .localCheckpoint(eager=False)  # feeds boundary job, count job, plan
     )
-    n_bins = 8
-    qs = [i / n_bins for i in range(1, n_bins)]
-    bnd_rows = (
-        scored.groupBy("source")
-        .agg(F.percentile_approx("avg_logprob", qs, 100).alias("bs"))
-        .collect()
+    ranked, totals = ordered_prefix(
+        scored, "avg_logprob", True, ("doc_id",), "_r", by=("source",)
     )
-    bounds = {r["source"]: sorted(set(float(v) for v in r["bs"])) for r in bnd_rows}
-    bnd_df = spark.createDataFrame(
-        [(s, v) for s, vs in bounds.items() for v in vs] or [("__none__", 0.0)],
-        "source string, bv double",
-    )
-    barr = (
-        bnd_df.groupBy("source").agg(F.sort_array(F.collect_list("bv")).alias("barr"))
-    )
-    # descending walk: bin 0 = highest scores => count bounds >= score
-    keyed = scored.join(F.broadcast(barr), "source", "left").withColumn(
-        "_b",
-        F.when(
-            F.col("barr").isNotNull(),
-            F.size(F.filter(F.col("barr"), lambda v: F.col("avg_logprob") <= v)),
-        ).otherwise(F.lit(0)),
-    )
-    w_local = Window.partitionBy("source", "_b").orderBy(
-        F.desc("avg_logprob"), F.asc("doc_id")
-    )
-    local = keyed.withColumn("_r", F.row_number().over(w_local))
-    counts = {
-        (r["source"], r["_b"]): r["c"]
-        for r in keyed.groupBy("source", "_b").agg(F.count("*").alias("c")).collect()
-    }
-    offs, ns = [], {}
-    for s in sorted({k[0] for k in counts}):
-        acc = 0
-        for b in sorted({k[1] for k in counts if k[0] == s}):
-            offs.append((s, b, acc))
-            acc += counts[(s, b)]
-        ns[s] = acc
-    # offsets and per-source totals ride as LITERAL maps keyed on
-    # "source:bucket" — never joined tables (the _offset_map
-    # constraint-inference hazard; both tables are |sources|x|bins|
-    # driver-sized anyway)
-    off_flat, n_flat = [], []
-    for s, b, off in offs:
-        off_flat.append(F.lit(f"{s}:{b}"))
-        off_flat.append(F.lit(int(off)))
-    for s, n in ns.items():
-        n_flat.append(F.lit(s))
-        n_flat.append(F.lit(int(n)))
-    off_map = F.create_map(*off_flat)
-    n_map = F.create_map(*n_flat)
-    okey = F.concat_ws(":", F.col("source"), F.col("_b").cast("string"))
-    ranked = local.withColumn(
-        "_rank", F.element_at(off_map, okey) + F.col("_r")
-    ).withColumn("_n", F.element_at(n_map, F.col("source")))
+    n = literal_lookup(totals, ranked, ("source",))
     tiled = ranked.select(
         "source",
         "avg_logprob",
         "n_words",
-        (F.floor((F.col("_rank") - 1) * 3 / F.col("_n")) + 1)
-        .cast("int")
-        .alias("t"),
+        (F.floor(F.col("_r") * 3 / n) + 1).cast("int").alias("t"),
     )
     bucket = (
         F.when(F.col("t") == 1, "head")
